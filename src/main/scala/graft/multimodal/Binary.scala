@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.{Bytes, Inflate}
+import graft.sources.Bytes.{be, le}
 
 /** Multimodal (image/audio/video) column plumbing.
   *
@@ -115,16 +117,12 @@ object Binary {
     * only these first bytes, so it runs as cheap per-row map work.
     */
   def parseImageMeta(b: Array[Byte]): Option[ImageMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int): Int =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
+    val r = Bytes(b); import r._
     if (b.length >= 25 && u8(0) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
         b(3) == 'G' && u8(4) == 0x0d && u8(5) == 0x0a && u8(6) == 0x1a &&
         u8(7) == 0x0a && b(12) == 'I' && b(13) == 'H' && b(14) == 'D' &&
         b(15) == 'R')
-      Some(ImageMeta("png", be32(16), be32(20), u8(24)))
+      Some(ImageMeta("png", be32(16).toInt, be32(20).toInt, u8(24)))
     else if (b.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
       var i = 2
       while (i + 3 < b.length) {
@@ -168,26 +166,22 @@ object Binary {
     * against a known-answer oracle.
     */
   def pngHeader(width: Int, height: Int, bitDepth: Int): Array[Byte] = {
-    def be32(v: Int) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
-      be32(13) ++ "IHDR".getBytes("US-ASCII") ++ be32(width) ++ be32(height) ++
-      Array[Byte](bitDepth.toByte, 2, 0, 0, 0) ++ be32(0) // truecolor, stub CRC
+      be(13, 4) ++ "IHDR".getBytes("US-ASCII") ++ be(width, 4) ++ be(height, 4) ++
+      Array[Byte](bitDepth.toByte, 2, 0, 0, 0) ++ be(0, 4) // truecolor, stub CRC
   }
 
   def jpegHeader(width: Int, height: Int): Array[Byte] = {
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
-    val app0 = Array[Byte](0xff.toByte, 0xe0.toByte) ++ be16(16) ++
+    val app0 = Array[Byte](0xff.toByte, 0xe0.toByte) ++ be(16, 2) ++
       "JFIF".getBytes("US-ASCII") ++ Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
-    val sof0 = Array[Byte](0xff.toByte, 0xc0.toByte) ++ be16(17) ++
-      Array[Byte](8) ++ be16(height) ++ be16(width) ++
+    val sof0 = Array[Byte](0xff.toByte, 0xc0.toByte) ++ be(17, 2) ++
+      Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
       Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
     Array[Byte](0xff.toByte, 0xd8.toByte) ++ app0 ++ sof0
   }
 
   def gifHeader(width: Int, height: Int, colorBits: Int): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    "GIF89a".getBytes("US-ASCII") ++ le16(width) ++ le16(height) ++
+    "GIF89a".getBytes("US-ASCII") ++ le(width, 2) ++ le(height, 2) ++
       Array[Byte]((((colorBits - 1) & 7) << 4).toByte, 0, 0)
   }
 
@@ -234,10 +228,7 @@ object Binary {
     * on — need only these bytes, so it runs as cheap per-row map work.
     */
   def parseWebpMeta(b: Array[Byte]): Option[WebpMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le24(i: Int): Int = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-    def le32(i: Int): Long = le24(i).toLong | (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     def tag(i: Int, s: String): Boolean =
       i + s.length <= b.length && s.indices.forall(k => b(i + k) == s(k).toByte)
     if (b.length < 20 || !tag(0, "RIFF") || !tag(8, "WEBP")) return None
@@ -272,12 +263,10 @@ object Binary {
   }
 
   private[multimodal] def riffWebp(fourcc: String, payload: Array[Byte]): Array[Byte] = {
-    def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val padded = if (payload.length % 2 == 1) payload :+ 0.toByte else payload
     val body = "WEBP".getBytes("US-ASCII") ++ fourcc.getBytes("US-ASCII") ++
-      le32(payload.length) ++ padded
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length) ++ body
+      le(payload.length, 4) ++ padded
+    "RIFF".getBytes("US-ASCII") ++ le(body.length, 4) ++ body
   }
 
   /** Minimal VALID WebP headers for each stream form — deterministic
@@ -301,10 +290,8 @@ object Binary {
   }
 
   def webpExtended(width: Int, height: Int, alpha: Boolean): Array[Byte] = {
-    def le24(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte)
     riffWebp("VP8X", Array[Byte](if (alpha) 0x10 else 0, 0, 0, 0) ++
-      le24(width - 1) ++ le24(height - 1))
+      le(width - 1, 3) ++ le(height - 1, 3))
   }
 
   /** Deterministic per-id synthetic WebP (variant cycles
@@ -347,11 +334,7 @@ object Binary {
     * map work.
     */
   def parseAudioMeta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     def tag(i: Int, s: String): Boolean =
       i + s.length <= b.length && s.indices.forall(k => b(i + k) == s(k).toByte)
     if (tag(0, "RIFF") && tag(8, "WAVE")) {
@@ -410,7 +393,7 @@ object Binary {
     * behind [[stubDecode]].)
     */
   private def parseMp3Meta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
+    val r = Bytes(b); import r._
     var i = 0L
     if (b.length >= 10 && u8(0) == 'I' && u8(1) == 'D' && u8(2) == '3') {
       val sz = ((u8(6) & 0x7f) << 21) | ((u8(7) & 0x7f) << 14) |
@@ -522,12 +505,7 @@ object Binary {
     * input rate; `n_frames` is the 48 kHz sample count.
     */
   def parseOggOpusMeta(b: Array[Byte]): Option[AudioMeta] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def le64(i: Int): Long = le32(i) | (le32(i + 4) << 32)
+    val r = Bytes(b); import r._
     var i = 0L
     var first = true
     var channels = -1; var preskip = -1; var rate = -1L
@@ -586,12 +564,10 @@ object Binary {
     while (rem >= 255) { lacing.write(255); rem -= 255 }
     lacing.write(rem) // 0 terminator when length is a 255-multiple
     val segs = lacing.toByteArray
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val page = "OggS".getBytes("US-ASCII") ++
       Array[Byte](0, flags.toByte) ++
-      le32(granule) ++ le32(granule >>> 32) ++
-      le32(serial.toLong & 0xffffffffL) ++ le32(seq.toLong & 0xffffffffL) ++
+      le(granule, 4) ++ le(granule >>> 32, 4) ++
+      le(serial.toLong & 0xffffffffL, 4) ++ le(seq.toLong & 0xffffffffL, 4) ++
       Array[Byte](0, 0, 0, 0) ++ // CRC placeholder
       Array[Byte](segs.length.toByte) ++ segs ++ payload
     var crc = 0
@@ -610,18 +586,15 @@ object Binary {
               nSamples48k: Long, dataBytes: Array[Byte],
               vendor: String = "graft",
               comments: Seq[(String, String)] = Seq.empty): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val head = "OpusHead".getBytes("US-ASCII") ++ Array[Byte](1,
-      channels.toByte) ++ le16(preskip) ++ le32(inputRate) ++
-      le16(0) ++ Array[Byte](0) // gain 0, mapping family 0
+      channels.toByte) ++ le(preskip, 2) ++ le(inputRate, 4) ++
+      le(0, 2) ++ Array[Byte](0) // gain 0, mapping family 0
     val vb = vendor.getBytes(utf8)
     val tags = "OpusTags".getBytes("US-ASCII") ++
-      le32(vb.length) ++ vb ++ le32(comments.length) ++
+      le(vb.length, 4) ++ vb ++ le(comments.length, 4) ++
       comments.flatMap { case (k, v) =>
-        val c = s"$k=$v".getBytes(utf8); le32(c.length) ++ c
+        val c = s"$k=$v".getBytes(utf8); le(c.length, 4) ++ c
       }
     oggPage(2, 0L, 0x6772, 0, head) ++
       oggPage(0, 0L, 0x6772, 1, tags) ++
@@ -668,11 +641,7 @@ object Binary {
     * rate, so the EOS granule is n_samples directly and duration
     * needs no 48 kHz rebase. */
   def parseOggVorbisMeta(b: Array[Byte]): Option[VorbisId] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def le32(i: Int): Long =
-      u8(i).toLong | (u8(i + 1).toLong << 8) | (u8(i + 2).toLong << 16) |
-        (u8(i + 3).toLong << 24)
-    def le64(i: Int): Long = le32(i) | (le32(i + 4) << 32)
+    val r = Bytes(b); import r._
     if (b == null || b.length < 27) return None
     var i = 0L
     var first = true
@@ -734,15 +703,13 @@ object Binary {
   def oggVorbis(channels: Int, rate: Long, nominal: Long,
                 bs0Exp: Int, bs1Exp: Int, nSamples: Long,
                 dataBytes: Array[Byte]): Array[Byte] = {
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val ident = Array[Byte](1) ++ "vorbis".getBytes("US-ASCII") ++
-      le32(0) ++ Array[Byte](channels.toByte) ++ le32(rate) ++
-      le32(0) ++ le32(nominal) ++ le32(0) ++
+      le(0, 4) ++ Array[Byte](channels.toByte) ++ le(rate, 4) ++
+      le(0, 4) ++ le(nominal, 4) ++ le(0, 4) ++
       Array[Byte]((bs0Exp | (bs1Exp << 4)).toByte, 1)
     val vb = "graft".getBytes("UTF-8")
     val comments = Array[Byte](3) ++ "vorbis".getBytes("US-ASCII") ++
-      le32(vb.length) ++ vb ++ le32(0) ++ Array[Byte](1)
+      le(vb.length, 4) ++ vb ++ le(0, 4) ++ Array[Byte](1)
     oggPage(2, 0L, 0x7653, 0, ident) ++
       oggPage(0, 0L, 0x7653, 1, comments) ++
       oggPage(4, nSamples, 0x7653, 2, dataBytes)
@@ -772,17 +739,14 @@ object Binary {
     */
   def wavHeader(sampleRate: Int, channels: Int, bitsPerSample: Int,
                 nFrames: Long): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val blockAlign = channels * bitsPerSample / 8
     val dataBytes = nFrames * blockAlign
-    "RIFF".getBytes("US-ASCII") ++ le32(36 + dataBytes) ++
+    "RIFF".getBytes("US-ASCII") ++ le(36 + dataBytes, 4) ++
       "WAVE".getBytes("US-ASCII") ++
-      "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++ le16(channels) ++
-      le32(sampleRate) ++ le32(sampleRate.toLong * blockAlign) ++
-      le16(blockAlign) ++ le16(bitsPerSample) ++
-      "data".getBytes("US-ASCII") ++ le32(dataBytes) // header only, no PCM
+      "fmt ".getBytes("US-ASCII") ++ le(16, 4) ++ le(1, 2) ++ le(channels, 2) ++
+      le(sampleRate, 4) ++ le(sampleRate.toLong * blockAlign, 4) ++
+      le(blockAlign, 2) ++ le(bitsPerSample, 2) ++
+      "data".getBytes("US-ASCII") ++ le(dataBytes, 4) // header only, no PCM
   }
 
   def flacHeader(sampleRate: Int, channels: Int, bitsPerSample: Int,
@@ -815,9 +779,7 @@ object Binary {
     * string + KEY=value UTF-8 records over b[from, end). */
   private def vorbisComments(b: Array[Byte], from: Long,
       end: Long): Option[VorbisTags] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     var q = from
     if (q + 4 > end) return None
     val vlen = le32(q); q += 4
@@ -856,15 +818,13 @@ object Binary {
   def parseFlacTags(b: Array[Byte]): Option[VorbisTags] = {
     if (b == null || b.length < 8 || !(b(0) == 'f' && b(1) == 'L' &&
       b(2) == 'a' && b(3) == 'C')) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     var p = 4L
     var last = false
     while (!last && p + 4 <= b.length) {
       val h = u8(p); last = (h & 0x80) != 0
       val typ = h & 0x7f
-      val len = (u8(p + 1) << 16) | (u8(p + 2) << 8) | u8(p + 3)
+      val len = be24(p + 1)
       if (p + 4 + len > b.length) return None
       if (typ == 4) return vorbisComments(b, p + 4, p + 4 + len)
       p += 4 + len
@@ -879,15 +839,13 @@ object Binary {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val base = flacHeader(sampleRate, channels, bitsPerSample, nFrames)
     base(4) = (base(4) & 0x7f).toByte // STREAMINFO is no longer last
-    def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val vb = vendor.getBytes(utf8)
     val body = new java.io.ByteArrayOutputStream()
-    body.write(le32(vb.length)); body.write(vb)
-    body.write(le32(comments.length))
+    body.write(le(vb.length, 4)); body.write(vb)
+    body.write(le(comments.length, 4))
     comments.foreach { case (k, v) =>
       val c = s"$k=$v".getBytes(utf8)
-      body.write(le32(c.length)); body.write(c)
+      body.write(le(c.length, 4)); body.write(c)
     }
     val blk = body.toByteArray
     base ++ Array[Byte]((0x80 | 4).toByte, (blk.length >>> 16).toByte,
@@ -919,9 +877,7 @@ object Binary {
   def parseOpusTags(b: Array[Byte]): Option[VorbisTags] = {
     if (b == null || b.length < 27 || b(0) != 'O' || b(1) != 'g' ||
       b(2) != 'g' || b(3) != 'S') return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     var i = 0L
     var first = true
     while (i + 27 <= b.length) {
@@ -999,11 +955,7 @@ object Binary {
     * malformed bytes.
     */
   def parseVideoMeta(b: Array[Byte]): Option[VideoMeta] = {
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long =
-      (be32(i) << 32) | be32(i + 4)
+    val r = Bytes(b); import r._
     def fourcc(i: Long): String =
       new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
     val n = b.length.toLong
@@ -1073,10 +1025,7 @@ object Binary {
     * infinite-loop rule). */
   def parseTracks(b: Array[Byte]): Option[Seq[TrackMeta]] = {
     if (b == null || b.length < 16) return None
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long = (be32(i) << 32) | be32(i + 4)
+    val r = Bytes(b); import r._
     def fourcc(i: Long): String =
       new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
     val n = b.length.toLong
@@ -1184,26 +1133,23 @@ object Binary {
     */
   def mp4Header(timescale: Long, duration: Long, nTracks: Int,
                 brand: String = "isom", mvhdV1: Boolean = false): Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def be64(v: Long) = be32(v >>> 32) ++ be32(v & 0xffffffffL)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be32(512L) ++
+      be(body.length + 8L, 4) ++ typ.getBytes("US-ASCII") ++ body
+    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be(512L, 4) ++
       "isommp41".getBytes("US-ASCII"))
     val mvhdBody =
       if (!mvhdV1)
-        Array[Byte](0, 0, 0, 0) ++ be32(0L) ++ be32(0L) ++
-          be32(timescale) ++ be32(duration) ++
-          be32(0x00010000L) ++ Array[Byte](0x01, 0, 0, 0) ++
+        Array[Byte](0, 0, 0, 0) ++ be(0L, 4) ++ be(0L, 4) ++
+          be(timescale, 4) ++ be(duration, 4) ++
+          be(0x00010000L, 4) ++ Array[Byte](0x01, 0, 0, 0) ++
           new Array[Byte](8) ++ new Array[Byte](36) ++
-          new Array[Byte](24) ++ be32(nTracks + 1L)
+          new Array[Byte](24) ++ be(nTracks + 1L, 4)
       else
-        Array[Byte](1, 0, 0, 0) ++ be64(0L) ++ be64(0L) ++
-          be32(timescale) ++ be64(duration) ++
-          be32(0x00010000L) ++ Array[Byte](0x01, 0, 0, 0) ++
+        Array[Byte](1, 0, 0, 0) ++ be(0L, 8) ++ be(0L, 8) ++
+          be(timescale, 4) ++ be(duration, 8) ++
+          be(0x00010000L, 4) ++ Array[Byte](0x01, 0, 0, 0) ++
           new Array[Byte](8) ++ new Array[Byte](36) ++
-          new Array[Byte](24) ++ be32(nTracks + 1L)
+          new Array[Byte](24) ++ be(nTracks + 1L, 4)
     val traks = Array.fill(nTracks)(box("trak", Array.empty[Byte]))
       .foldLeft(Array.empty[Byte])(_ ++ _)
     ftyp ++ box("moov", box("mvhd", mvhdBody) ++ traks)
@@ -1234,34 +1180,32 @@ object Binary {
   def mp4WithTracks(brand: String, mvTimescale: Long, mvDuration: Long,
       specs: Seq[(String, Long, Seq[(Long, Long)], Long, Seq[Long])])
       : Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
+      be(body.length + 8L, 4) ++ typ.getBytes("US-ASCII") ++ body
     val v0 = Array[Byte](0, 0, 0, 0) // version 0 + flags
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be32(512L) ++
+    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be(512L, 4) ++
       "isommp41".getBytes("US-ASCII"))
     val mvhd = box("mvhd",
-      v0 ++ be32(0L) ++ be32(0L) ++ be32(mvTimescale) ++
-        be32(mvDuration) ++ be32(0x00010000L) ++
+      v0 ++ be(0L, 4) ++ be(0L, 4) ++ be(mvTimescale, 4) ++
+        be(mvDuration, 4) ++ be(0x00010000L, 4) ++
         Array[Byte](0x01, 0, 0, 0) ++ new Array[Byte](8) ++
         new Array[Byte](36) ++ new Array[Byte](24) ++
-        be32(specs.length + 1L))
+        be(specs.length + 1L, 4))
     val traks = specs.map { case (handler, ts, runs, fixed, sizes) =>
       val dur = runs.map { case (c, d) => c * d }.sum
       val nSamples = runs.map(_._1).sum
       val mdhd = box("mdhd",
-        v0 ++ be32(0L) ++ be32(0L) ++ be32(ts) ++ be32(dur) ++
+        v0 ++ be(0L, 4) ++ be(0L, 4) ++ be(ts, 4) ++ be(dur, 4) ++
           Array[Byte](0x55, 0xc4.toByte, 0, 0))
       val hdlr = box("hdlr",
-        v0 ++ be32(0L) ++ handler.getBytes("US-ASCII") ++
+        v0 ++ be(0L, 4) ++ handler.getBytes("US-ASCII") ++
           new Array[Byte](12) ++ Array[Byte](0))
-      val stts = box("stts", v0 ++ be32(runs.length.toLong) ++
-        runs.flatMap { case (c, d) => be32(c) ++ be32(d) }.toArray)
-      val stsz = box("stsz", v0 ++ be32(fixed) ++
-        be32(if (fixed != 0L) nSamples else sizes.length.toLong) ++
+      val stts = box("stts", v0 ++ be(runs.length.toLong, 4) ++
+        runs.flatMap { case (c, d) => be(c, 4) ++ be(d, 4) }.toArray)
+      val stsz = box("stsz", v0 ++ be(fixed, 4) ++
+        be(if (fixed != 0L) nSamples else sizes.length.toLong, 4) ++
         (if (fixed != 0L) Array.empty[Byte]
-         else sizes.flatMap(be32).toArray))
+         else sizes.flatMap(be(_, 4)).toArray))
       box("trak", box("mdia", mdhd ++ hdlr ++
         box("minf", box("stbl", stts ++ stsz))))
     }.foldLeft(Array.empty[Byte])(_ ++ _)
@@ -1309,10 +1253,7 @@ object Binary {
     */
   def parseAvifMeta(b: Array[Byte]): Option[AvifMeta] = {
     if (b == null || b.length < 16) return None
-    def u8(i: Long): Long = b(i.toInt) & 0xffL
-    def be32(i: Long): Long =
-      (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def be64(i: Long): Long = (be32(i) << 32) | be32(i + 4)
+    val r = Bytes(b); import r._
     def fourcc(i: Long): String =
       new String(b.slice(i.toInt, i.toInt + 4), "US-ASCII")
     val n = b.length.toLong
@@ -1381,17 +1322,15 @@ object Binary {
     * [[parseAvifMeta]] round-trips. */
   def avifHeader(width: Int, height: Int, bitDepth: Int, alpha: Boolean,
                  brand: String = "avif"): Array[Byte] = {
-    def be32(v: Long) = Array[Byte](
-      (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
     def box(typ: String, body: Array[Byte]): Array[Byte] =
-      be32(body.length + 8L) ++ typ.getBytes("US-ASCII") ++ body
+      be(body.length + 8L, 4) ++ typ.getBytes("US-ASCII") ++ body
     def fullBox(typ: String, body: Array[Byte]): Array[Byte] =
       box(typ, Array[Byte](0, 0, 0, 0) ++ body)
-    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be32(0L) ++
+    val ftyp = box("ftyp", brand.getBytes("US-ASCII") ++ be(0L, 4) ++
       "avifmif1miaf".getBytes("US-ASCII"))
-    val hdlr = fullBox("hdlr", be32(0L) ++
+    val hdlr = fullBox("hdlr", be(0L, 4) ++
       "pict".getBytes("US-ASCII") ++ new Array[Byte](13))
-    val ispe = fullBox("ispe", be32(width.toLong) ++ be32(height.toLong))
+    val ispe = fullBox("ispe", be(width.toLong, 4) ++ be(height.toLong, 4))
     val pixi = fullBox("pixi", Array[Byte](3, bitDepth.toByte,
       bitDepth.toByte, bitDepth.toByte))
     val auxC = if (alpha) fullBox("auxC",
@@ -1435,8 +1374,7 @@ object Binary {
   def parseExifMeta(b: Array[Byte]): Option[ExifMeta] = {
     if (b == null || b.length < 4 || (b(0) & 0xff) != 0xff ||
       (b(1) & 0xff) != 0xd8) return None
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val r = Bytes(b); import r._
     var i = 2
     var tiffAt = -1
     var tiffEnd = -1
@@ -1462,11 +1400,12 @@ object Binary {
     if (!le && !bigE) return None
     def t16(off: Long): Int = {
       val a = tiffAt + off.toInt
-      if (le) u8(a) | (u8(a + 1) << 8) else (u8(a) << 8) | u8(a + 1)
+      if (le) le16(a) else be16(a)
     }
-    def t32(off: Long): Long =
-      if (le) t16(off).toLong | (t16(off + 2).toLong << 16)
-      else (t16(off).toLong << 16) | t16(off + 2).toLong
+    def t32(off: Long): Long = {
+      val a = tiffAt + off.toInt
+      if (le) le32(a) else be32(a)
+    }
     val n = (tiffEnd - tiffAt).toLong
     if (n < 8 || t16(2) != 42) return None
     val ifd = t32(4)
@@ -1501,16 +1440,14 @@ object Binary {
     * dims from SOF past it, [[parseExifMeta]] reads the EXIF. */
   def jpegWithExif(width: Int, height: Int, orientation: Int,
                    datetime: String): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
     val dt = datetime.getBytes("US-ASCII") :+ 0.toByte
     // IFD: 2 entries + next-IFD(0); DateTime bytes follow at offset
     // 8 (tiff header) + 2 + 24 + 4 = 38
-    val ifd = le16(2) ++
-      (le16(274) ++ le16(3) ++ le32(1) ++ le16(orientation) ++ le16(0)) ++
-      (le16(306) ++ le16(2) ++ le32(dt.length) ++ le32(38)) ++
-      le32(0)
-    val tiff = "II".getBytes("US-ASCII") ++ le16(42) ++ le32(8) ++
+    val ifd = le(2, 2) ++
+      (le(274, 2) ++ le(3, 2) ++ le(1, 4) ++ le(orientation, 2) ++ le(0, 2)) ++
+      (le(306, 2) ++ le(2, 2) ++ le(dt.length, 4) ++ le(38, 4)) ++
+      le(0, 4)
+    val tiff = "II".getBytes("US-ASCII") ++ le(42, 2) ++ le(8, 4) ++
       ifd ++ dt
     val payload = "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff
     val app1 = Array[Byte](0xff.toByte, 0xe1.toByte) ++
@@ -1550,7 +1487,7 @@ object Binary {
   def parseId3v2(b: Array[Byte]): Option[Id3Meta] = {
     if (b == null || b.length < 10 || b(0) != 'I' || b(1) != 'D' ||
       b(2) != '3') return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
+    val r = Bytes(b); import r._
     val major = u8(3)
     if (major != 2 && major != 3 && major != 4) return None
     val tagSize = ((u8(6) & 0x7f) << 21) | ((u8(7) & 0x7f) << 14) |
@@ -1567,12 +1504,11 @@ object Binary {
         val id = new String(b, i.toInt, idLen, "US-ASCII")
         if (!id.forall(c => c.isUpper || c.isDigit)) return None
         val size = major match {
-          case 2 => (u8(i + 3) << 16) | (u8(i + 4) << 8) | u8(i + 5)
+          case 2 => be24(i + 3)
           case 4 =>
             ((u8(i + 4) & 0x7f) << 21) | ((u8(i + 5) & 0x7f) << 14) |
               ((u8(i + 6) & 0x7f) << 7) | (u8(i + 7) & 0x7f)
-          case _ => (u8(i + 4) << 24) | (u8(i + 5) << 16) |
-            (u8(i + 6) << 8) | u8(i + 7)
+          case _ => be32(i + 4).toInt
         }
         if (size < 0 || i + hdr + size > end) return None
         if (id.startsWith("T") && size >= 1) {
@@ -1736,8 +1672,7 @@ object Binary {
     * negative = top-down; magnitude reported), bpp at 28. */
   def parseBmpMeta(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 30 || b(0) != 'B' || b(1) != 'M') return None
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def le32(i: Int): Long = le16(i).toLong | (le16(i + 2).toLong << 16)
+    val r = Bytes(b); import r._
     val dibSize = le32(14)
     if (dibSize < 40) return None // core-header BMPs out of scope
     val w = le32(18).toInt
@@ -1751,7 +1686,7 @@ object Binary {
   /** ICO: the directory's FIRST image entry (0-byte dim = 256). */
   def parseIcoMeta(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 22) return None
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+    val r = Bytes(b); import r._
     if (le16(0) != 0 || le16(2) != 1) return None // reserved, type=icon
     val count = le16(4)
     if (count < 1) return None
@@ -1770,12 +1705,9 @@ object Binary {
     val le = b(0) == 'I' && b(1) == 'I'
     val be = b(0) == 'M' && b(1) == 'M'
     if (!le && !be) return None
-    def u16(i: Long): Int =
-      if (le) (b(i.toInt) & 0xff) | ((b(i.toInt + 1) & 0xff) << 8)
-      else ((b(i.toInt) & 0xff) << 8) | (b(i.toInt + 1) & 0xff)
-    def u32(i: Long): Long =
-      if (le) u16(i).toLong | (u16(i + 2).toLong << 16)
-      else (u16(i).toLong << 16) | u16(i + 2).toLong
+    val r = Bytes(b); import r._
+    def u16(i: Long): Int = if (le) le16(i) else be16(i)
+    def u32(i: Long): Long = if (le) le32(i) else be32(i)
     if (u16(2) != 42) return None
     val ifd = u32(4)
     if (ifd + 2 > b.length) return None
@@ -1817,32 +1749,26 @@ object Binary {
   /** Minimal valid builders for the three legacy formats. */
   def bmpHeader(width: Int, height: Int, bpp: Int,
                 topDown: Boolean = false): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
-    "BM".getBytes("US-ASCII") ++ le32(54) ++ le32(0) ++ le32(54) ++
-      le32(40) ++ le32(width) ++ le32(if (topDown) -height else height) ++
-      le16(1) ++ le16(bpp) ++ le32(0) ++ le32(0) ++ le32(0) ++ le32(0) ++
-      le32(0) ++ le32(0)
+    "BM".getBytes("US-ASCII") ++ le(54, 4) ++ le(0, 4) ++ le(54, 4) ++
+      le(40, 4) ++ le(width, 4) ++ le(if (topDown) -height else height, 4) ++
+      le(1, 2) ++ le(bpp, 2) ++ le(0, 4) ++ le(0, 4) ++ le(0, 4) ++ le(0, 4) ++
+      le(0, 4) ++ le(0, 4)
   }
 
   def icoHeader(width: Int, height: Int, bpp: Int,
                 nImages: Int = 1): Array[Byte] = {
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Int) = le16(v & 0xffff) ++ le16(v >>> 16)
-    val dir = le16(0) ++ le16(1) ++ le16(nImages)
+    val dir = le(0, 2) ++ le(1, 2) ++ le(nImages, 2)
     val entry = Array[Byte](
       (if (width == 256) 0 else width).toByte,
       (if (height == 256) 0 else height).toByte, 0, 0) ++
-      le16(1) ++ le16(bpp) ++ le32(0) ++ le32(22)
+      le(1, 2) ++ le(bpp, 2) ++ le(0, 4) ++ le(22, 4)
     dir ++ entry
   }
 
   def tiffHeader(width: Int, height: Int, bitsPerSample: Int,
                  bigEndian: Boolean = false): Array[Byte] = {
-    def w16(v: Int) = if (bigEndian) Array[Byte]((v >>> 8).toByte, v.toByte)
-      else Array[Byte](v.toByte, (v >>> 8).toByte)
-    def w32(v: Int) = if (bigEndian) w16(v >>> 16) ++ w16(v & 0xffff)
-      else w16(v & 0xffff) ++ w16(v >>> 16)
+    def w16(v: Int) = if (bigEndian) be(v, 2) else le(v, 2)
+    def w32(v: Int) = if (bigEndian) be(v, 4) else le(v, 4)
     val order = if (bigEndian) "MM" else "II"
     // IFD at offset 8: 3 entries + next-IFD 0
     def entry(tag: Int, typ: Int, cnt: Int, v: Int): Array[Byte] = {
@@ -1885,9 +1811,6 @@ object Binary {
     parts.foreach(p => c.update(p))
     c.getValue.toInt
   }
-
-  private def pngBe32(v: Int): Array[Byte] = Array[Byte](
-    (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
 
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -1940,9 +1863,9 @@ object Binary {
     val idat = out.toByteArray
     def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
       val t = typ.getBytes("US-ASCII")
-      pngBe32(data.length) ++ t ++ data ++ pngBe32(crc32Of(t, data))
+      be(data.length, 4) ++ t ++ data ++ be(crc32Of(t, data), 4)
     }
-    val ihdr = pngBe32(width) ++ pngBe32(height) ++
+    val ihdr = be(width, 4) ++ be(height, 4) ++
       Array[Byte](8, 2, 0, 0, 0) // depth 8, truecolor, deflate, adaptive, no interlace
     Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
       chunk("IHDR", ihdr) ++ chunk("IDAT", idat) ++ chunk("IEND", Array.empty)
@@ -1959,9 +1882,7 @@ object Binary {
     * become a negative step).
     */
   def pngDecode(b: Array[Byte]): Option[PngImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be32(i: Int): Long =
-      ((u8(i).toLong << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)) & 0xffffffffL
+    val r = Bytes(b); import r._
     if (b.length < 8 + 25 || u8(0) != 0x89 || b(1) != 'P' || b(2) != 'N' ||
         b(3) != 'G') return None
     var pos = 8L
@@ -1996,19 +1917,8 @@ object Binary {
     if (!sawEnd || w < 0) return None
     val bpp = 3
     val stride = w * bpp
-    val raw = new Array[Byte](h * (1 + stride))
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(idat.toByteArray)
-    var got = 0
-    try {
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        got += n
-      }
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inf.end()
-    if (got != raw.length) return None
+    val raw = Inflate.exact(idat.toByteArray, h * (1L + stride),
+      raw = false).getOrElse(return None) // zlib stream, exact scanlines
     val px = new Array[Byte](h * stride)
     var y = 0
     while (y < h) {
@@ -2159,9 +2069,6 @@ object Binary {
                    samples: Array[Short]): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0,
       s"samples (${samples.length}) must be a multiple of channels ($channels)")
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
     val blockAlign = channels * 2
     val data = new Array[Byte](samples.length * 2)
     var i = 0
@@ -2170,20 +2077,20 @@ object Binary {
       data(2 * i + 1) = (samples(i) >> 8).toByte
       i += 1
     }
-    val fmt = "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++
-      le16(channels) ++ le32(sampleRate.toLong) ++
-      le32(sampleRate.toLong * blockAlign) ++ le16(blockAlign) ++ le16(16)
+    val fmt = "fmt ".getBytes("US-ASCII") ++ le(16, 4) ++ le(1, 2) ++
+      le(channels, 2) ++ le(sampleRate.toLong, 4) ++
+      le(sampleRate.toLong * blockAlign, 4) ++ le(blockAlign, 2) ++ le(16, 2)
     // ancillary LIST/INFO chunk (ISFT = encoding software, NUL-padded
     // to even length per the RIFF word-alignment rule)
     val listBody = "INFO".getBytes("US-ASCII") ++
-      "ISFT".getBytes("US-ASCII") ++ le32(6) ++
+      "ISFT".getBytes("US-ASCII") ++ le(6, 4) ++
       "graft\u0000".getBytes("US-ASCII")
-    val list = "LIST".getBytes("US-ASCII") ++ le32(listBody.length.toLong) ++
+    val list = "LIST".getBytes("US-ASCII") ++ le(listBody.length.toLong, 4) ++
       listBody
     val dataChunk = "data".getBytes("US-ASCII") ++
-      le32(data.length.toLong) ++ data
+      le(data.length.toLong, 4) ++ data
     val body = "WAVE".getBytes("US-ASCII") ++ fmt ++ list ++ dataChunk
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body
+    "RIFF".getBytes("US-ASCII") ++ le(body.length.toLong, 4) ++ body
   }
 
   /** REAL WAV PCM decode, dependency-free: RIFF chunk walk (word-
@@ -2195,10 +2102,7 @@ object Binary {
     * byte-walk discipline.
     */
   def wavPcmDecode(b: Array[Byte]): Option[WavPcm] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le16(i: Long): Int = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
+    val r = Bytes(b); import r._
     def fourcc(i: Long): String =
       new String(b, i.toInt, 4, "US-ASCII")
     val n = b.length.toLong
@@ -2438,7 +2342,6 @@ object Binary {
     val gctBits = 32 - Integer.numberOfLeadingZeros(palette.length - 1)
     require(palette.length == (1 << gctBits) && gctBits >= 1 && gctBits <= 8,
       s"palette size ${palette.length} must be a power of two in [2,256]")
-    def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
     val minCode = math.max(2, gctBits)
     val gct = palette.flatMap(p => Array[Byte](
       (p >>> 16).toByte, (p >>> 8).toByte, p.toByte))
@@ -2453,13 +2356,13 @@ object Binary {
     }
     sub.write(0) // block terminator
     "GIF89a".getBytes("US-ASCII") ++
-      le16(width) ++ le16(height) ++
+      le(width, 2) ++ le(height, 2) ++
       Array[Byte]((0x80 | ((gctBits - 1) << 4) | (gctBits - 1)).toByte,
         0, 0) ++
       gct ++
       Array[Byte](0x21, 0xf9.toByte, 4, 0, 0, 0, 0, 0) ++ // GCE (skipped)
-      Array[Byte](0x2c) ++ le16(0) ++ le16(0) ++ le16(width) ++
-      le16(height) ++ Array[Byte](0) ++ // no LCT, no interlace
+      Array[Byte](0x2c) ++ le(0, 2) ++ le(0, 2) ++ le(width, 2) ++
+      le(height, 2) ++ Array[Byte](0) ++ // no LCT, no interlace
       Array[Byte](minCode.toByte) ++ sub.toByteArray ++
       Array[Byte](0x3b)
   }
@@ -2472,8 +2375,7 @@ object Binary {
     * sub-frames return None rather than junk pixels.
     */
   def gifDecode(b: Array[Byte]): Option[GifImage] = {
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le16(i: Long): Int = u8(i) | (u8(i + 1) << 8)
+    val r = Bytes(b); import r._
     val n = b.length.toLong
     if (n < 14) return None
     val magic = new String(b, 0, 6, "US-ASCII")
@@ -2487,8 +2389,7 @@ object Binary {
     val palette = new Array[Int](gctSize)
     var j = 0
     while (j < gctSize) {
-      palette(j) = (u8(pos + 3L * j) << 16) | (u8(pos + 3L * j + 1) << 8) |
-        u8(pos + 3L * j + 2)
+      palette(j) = be24(pos + 3L * j)
       j += 1
     }
     pos += gctSize * 3L
@@ -2771,13 +2672,12 @@ object Binary {
       s"need ${bw * bh} blocks, got ${blocks.length}")
     require(blocks.forall(blk => blk.length == 64 &&
       blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
+      Array[Byte](0xff.toByte, marker.toByte) ++ be(body.length + 2, 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
       Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
     val dqt = seg(0xdb, Array[Byte](0) ++ Array.fill[Byte](64)(16))
-    val sof0 = seg(0xc0, Array[Byte](8) ++ be16(height) ++ be16(width) ++
+    val sof0 = seg(0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
       Array[Byte](1, 1, 0x11, 0))
     val dhtDc = seg(0xc4, Array[Byte](0x00) ++
       jpegDcBits.map(_.toByte) ++ jpegDcVals)
@@ -2797,7 +2697,7 @@ object Binary {
     }
     def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
     val dri = if (restartInterval > 0)
-      seg(0xdd, be16(restartInterval)) else Array.empty[Byte]
+      seg(0xdd, be(restartInterval, 2)) else Array.empty[Byte]
     val entropyOut = new java.io.ByteArrayOutputStream()
     var w = new JpegBitWriter
     var prev = 0
@@ -2859,8 +2759,7 @@ object Binary {
     * overruns.
     */
   def jpegDecode(b: Array[Byte]): Option[JpegImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val rd = Bytes(b); import rd._
     val n = b.length
     if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
     var i = 2
@@ -3148,14 +3047,13 @@ object Binary {
     require((yBlocks ++ cbBlocks ++ crBlocks).forall(blk =>
       blk.length == 64 && blk.forall(c => c > -1024 && c < 1024)),
       "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
+      Array[Byte](0xff.toByte, marker.toByte) ++ be(body.length + 2, 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
       Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
     val dqt = seg(0xdb, Array[Byte](0x00) ++ Array.fill[Byte](64)(16) ++
       Array[Byte](0x01) ++ Array.fill[Byte](64)(16))
-    val sof0 = seg(0xc0, Array[Byte](8) ++ be16(height) ++ be16(width) ++
+    val sof0 = seg(0xc0, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
       Array[Byte](3, 1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1))
     val dht = seg(0xc4,
       Array[Byte](0x00) ++ jpegDcBits.map(_.toByte) ++ jpegDcVals ++
@@ -3232,8 +3130,7 @@ object Binary {
     * oracles.
     */
   def jpegDecodeColor420(b: Array[Byte]): Option[JpegYCbCr] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val rd = Bytes(b); import rd._
     val n = b.length
     if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
     var i = 2
@@ -3531,13 +3428,12 @@ object Binary {
       s"need ${bw * bh} blocks, got ${blocks.length}")
     require(blocks.forall(blk => blk.length == 64 &&
       blk.forall(c => c > -1024 && c < 1024)), "coef category must be <= 10")
-    def be16(v: Int) = Array[Byte]((v >>> 8).toByte, v.toByte)
     def seg(marker: Int, body: Array[Byte]): Array[Byte] =
-      Array[Byte](0xff.toByte, marker.toByte) ++ be16(body.length + 2) ++ body
+      Array[Byte](0xff.toByte, marker.toByte) ++ be(body.length + 2, 2) ++ body
     val app0 = seg(0xe0, "JFIF".getBytes("US-ASCII") ++
       Array[Byte](0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
     val dqt = seg(0xdb, Array[Byte](0) ++ Array.fill[Byte](64)(16))
-    val sof2 = seg(0xc2, Array[Byte](8) ++ be16(height) ++ be16(width) ++
+    val sof2 = seg(0xc2, Array[Byte](8) ++ be(height, 2) ++ be(width, 2) ++
       Array[Byte](1, 1, 0x11, 0))
     val dhtDc = seg(0xc4, Array[Byte](0x00) ++
       jpegDcBits.map(_.toByte) ++ jpegDcVals)
@@ -3677,8 +3573,7 @@ object Binary {
     * codes, band violations, or coefficient overruns.
     */
   def jpegDecodeProgressive(b: Array[Byte]): Option[JpegImage] = {
-    def u8(i: Int): Int = b(i) & 0xff
-    def be16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    val r = Bytes(b); import r._
     val n = b.length
     if (n < 4 || u8(0) != 0xff || u8(1) != 0xd8) return None
     var i = 2
@@ -4137,7 +4032,6 @@ object Binary {
     if (n == 0) 0
     else if ((v & (1L << (n - 1))) != 0) (v - (1L << n)).toInt else v.toInt
 
-  private def zigzagDec(u: Long): Int = (((u >>> 1) ^ -(u & 1L))).toInt
 
   private val flacBlockSizes = Array(-1, 192, 576, 1152, 2304, 4608, -6, -7,
     256, 512, 1024, 2048, 4096, 8192, 16384, 32768)
@@ -4313,7 +4207,7 @@ object Binary {
   def flacDecode(b: Array[Byte]): Option[FlacAudio] = {
     if (b.length < 42 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' ||
       b(3) != 'C') return None
-    def u8(i: Int): Int = b(i) & 0xff
+    val rd = Bytes(b); import rd._
     // metadata walk: STREAMINFO must be first; skip to last block
     var i = 4
     var rate = -1; var ch = -1; var bits = -1; var total = -1L
@@ -4323,7 +4217,7 @@ object Binary {
       if (i + 4 > b.length) return None
       last = (u8(i) & 0x80) != 0
       val btype = u8(i) & 0x7f
-      val len = (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
+      val len = be24(i + 1)
       if (first) {
         if (btype != 0 || len != 34) return None
         val p = i + 4
@@ -4511,7 +4405,8 @@ object Binary {
             if (q < 0) return false
             val rem = r.readBits(prm)
             if (prm > 0 && rem < 0) return false
-            xs(idx) = zigzagDec((q.toLong << prm) | (if (prm > 0) rem else 0L))
+            val u = (q.toLong << prm) | (if (prm > 0) rem else 0L)
+            xs(idx) = Bytes.unzigzag(u).toInt
             idx += 1; k += 1
           }
         }

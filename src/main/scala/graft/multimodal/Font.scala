@@ -2,6 +2,8 @@ package graft.multimodal
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
+import graft.sources.{Bytes, Inflate}
+import graft.sources.Bytes.be
 
 /** TTF/OTF font metadata — web crawls hit font binaries constantly
   * (every site ships WOFF/TTF), and an asset classifier wants the
@@ -31,15 +33,13 @@ object Font {
 
   def parseFont(b: Array[Byte]): Option[FontMeta] = {
     if (b == null || b.length < 12) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
+    val r = Bytes(b); import r._
     val n = b.length.toLong
-    val ver = u32(0)
+    val ver = be32(0)
     val format = if (ver == 0x00010000L) "ttf"
       else if (ver == 0x4F54544FL) "otf" // 'OTTO'
       else return None
-    val numTables = u16(4)
+    val numTables = be16(4)
     if (numTables < 1 || numTables > 512) return None
     if (12L + 16L * numTables > n) return None
     var nameAt = -1L; var nameLen = 0L
@@ -49,8 +49,8 @@ object Font {
     while (t < numTables) {
       val rec = 12L + 16L * t
       val tag = new String(b.slice(rec.toInt, rec.toInt + 4), "US-ASCII")
-      val off = u32(rec + 8)
-      val len = u32(rec + 12)
+      val off = be32(rec + 8)
+      val len = be32(rec + 12)
       if (off < 0 || len < 0 || off + len > n) return None
       tag match {
         case "name" => nameAt = off; nameLen = len
@@ -61,22 +61,22 @@ object Font {
       t += 1
     }
     if (headAt < 0 || headLen < 54) return None
-    if (u32(headAt + 12) != 0x5F0F3CF5L) return None // head magic
-    val unitsPerEm = u16(headAt + 18)
+    if (be32(headAt + 12) != 0x5F0F3CF5L) return None // head magic
+    val unitsPerEm = be16(headAt + 18)
     if (maxpAt < 0 || maxpLen < 6) return None
-    val nGlyphs = u16(maxpAt + 4)
+    val nGlyphs = be16(maxpAt + 4)
     var family = ""; var subfamily = ""
     var famPlat = -1; var subPlat = -1
     if (nameAt >= 0 && nameLen >= 6) {
-      val count = u16(nameAt + 2)
-      val strBase = nameAt + u16(nameAt + 4)
+      val count = be16(nameAt + 2)
+      val strBase = nameAt + be16(nameAt + 4)
       var r = 0
       while (r < count && nameAt + 6 + 12L * (r + 1) <= nameAt + nameLen) {
         val rec = nameAt + 6 + 12L * r
-        val plat = u16(rec)
-        val nameId = u16(rec + 6)
-        val len = u16(rec + 8)
-        val off = strBase + u16(rec + 10)
+        val plat = be16(rec)
+        val nameId = be16(rec + 6)
+        val len = be16(rec + 8)
+        val off = strBase + be16(rec + 10)
         if ((nameId == 1 || nameId == 2) && off + len <= n &&
           (plat == 1 || plat == 3)) {
           val value =
@@ -97,11 +97,6 @@ object Font {
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def be16(v: Int): Array[Byte] =
-    Array((v >>> 8).toByte, v.toByte)
-  private def be32(v: Long): Array[Byte] =
-    Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-
   /** Deterministic per-id sfnt with head/maxp/name: format alternates
     * ttf/otf, the name table carries BOTH a Mac (decoy) and a Windows
     * (winning, UTF-16BE) family record, subfamily cycles
@@ -115,10 +110,10 @@ object Font {
     val upem = if (id % 2 == 0) 1000 else 2048
     val nGlyphs = (id % 500 + 10).toInt
     // head: 54 bytes, magic at +12, unitsPerEm at +18
-    val head = be32(0x00010000L) ++ be32(0) ++ be32(0) ++
-      be32(0x5F0F3CF5L) ++ be16(0) ++ be16(upem) ++
+    val head = be(0x00010000L, 4) ++ be(0, 4) ++ be(0, 4) ++
+      be(0x5F0F3CF5L, 4) ++ be(0, 2) ++ be(upem, 2) ++
       Array.fill(54 - 20)(0.toByte)
-    val maxp = be32(0x00010000L) ++ be16(nGlyphs) ++
+    val maxp = be(0x00010000L, 4) ++ be(nGlyphs, 2) ++
       Array.fill(26)(0.toByte)
     // name: Mac decoy family + Windows family (UTF-16BE) + subfamily
     val macFam = ("Mac " + family).getBytes("ISO-8859-1")
@@ -126,25 +121,25 @@ object Font {
     val winSub = subfamily.getBytes("UTF-16BE")
     val strings = macFam ++ winFam ++ winSub
     val recs =
-      be16(1) ++ be16(0) ++ be16(0) ++ be16(1) ++
-        be16(macFam.length) ++ be16(0) ++
-      be16(3) ++ be16(1) ++ be16(0x409) ++ be16(1) ++
-        be16(winFam.length) ++ be16(macFam.length) ++
-      be16(3) ++ be16(1) ++ be16(0x409) ++ be16(2) ++
-        be16(winSub.length) ++ be16(macFam.length + winFam.length)
-    val name = be16(0) ++ be16(3) ++ be16(6 + recs.length) ++
+      be(1, 2) ++ be(0, 2) ++ be(0, 2) ++ be(1, 2) ++
+        be(macFam.length, 2) ++ be(0, 2) ++
+      be(3, 2) ++ be(1, 2) ++ be(0x409, 2) ++ be(1, 2) ++
+        be(winFam.length, 2) ++ be(macFam.length, 2) ++
+      be(3, 2) ++ be(1, 2) ++ be(0x409, 2) ++ be(2, 2) ++
+        be(winSub.length, 2) ++ be(macFam.length + winFam.length, 2)
+    val name = be(0, 2) ++ be(3, 2) ++ be(6 + recs.length, 2) ++
       recs ++ strings
     val tables = Seq(("head", head), ("maxp", maxp), ("name", name))
     val headerLen = 12 + 16 * tables.length
     var off = headerLen
     val dir = new java.io.ByteArrayOutputStream()
-    dir.write(be32(if (otf) 0x4F54544FL else 0x00010000L))
-    dir.write(be16(tables.length)); dir.write(be16(0))
-    dir.write(be16(0)); dir.write(be16(0))
+    dir.write(be(if (otf) 0x4F54544FL else 0x00010000L, 4))
+    dir.write(be(tables.length, 2)); dir.write(be(0, 2))
+    dir.write(be(0, 2)); dir.write(be(0, 2))
     tables.foreach { case (tag, data) =>
       dir.write(tag.getBytes("US-ASCII"))
-      dir.write(be32(0)) // checksum: deliberately wrong
-      dir.write(be32(off)); dir.write(be32(data.length))
+      dir.write(be(0, 4)) // checksum: deliberately wrong
+      dir.write(be(off, 4)); dir.write(be(data.length, 4))
       off += data.length
     }
     tables.foreach { case (_, data) => dir.write(data) }
@@ -162,26 +157,24 @@ object Font {
     * documented codec-table boundary.) */
   def parseWoff(b: Array[Byte]): Option[FontMeta] = {
     if (b == null || b.length < 44) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
-    if (u32(0) != 0x774F4646L) return None // 'wOFF'
-    val flavor = u32(4)
-    val numTables = u16(12)
+    val r = Bytes(b); import r._
+    if (be32(0) != 0x774F4646L) return None // 'wOFF'
+    val flavor = be32(4)
+    val numTables = be16(12)
     if (numTables < 1 || numTables > 512) return None
     if (44L + 20L * numTables > b.length) return None
     val n = b.length.toLong
     val entries = (0 until numTables).map { t =>
       val rec = 44L + 20L * t
       val tag = b.slice(rec.toInt, rec.toInt + 4)
-      val off = u32(rec + 4)
-      val compLen = u32(rec + 8)
-      val origLen = u32(rec + 12)
+      val off = be32(rec + 4)
+      val compLen = be32(rec + 8)
+      val origLen = be32(rec + 12)
       if (off < 0 || compLen < 0 || off + compLen > n) return None
       if (origLen < 0 || origLen > (1 << 24)) return None
       val raw = b.slice(off.toInt, (off + compLen).toInt)
       val data = if (compLen < origLen)
-        graft.sources.Inflate(raw, raw = false, cap = 1 << 24)
+        Inflate(raw, raw = false, cap = 1 << 24)
           .getOrElse(return None)
       else raw
       if (data.length != origLen) return None
@@ -189,13 +182,13 @@ object Font {
     }
     // reconstruct the sfnt: offset table + directory + table data
     val out = new java.io.ByteArrayOutputStream()
-    out.write(be32(flavor))
-    out.write(be16(numTables)); out.write(be16(0))
-    out.write(be16(0)); out.write(be16(0))
+    out.write(be(flavor, 4))
+    out.write(be(numTables, 2)); out.write(be(0, 2))
+    out.write(be(0, 2)); out.write(be(0, 2))
     var off = 12 + 16 * numTables
     entries.foreach { case (tag, data) =>
-      out.write(tag); out.write(be32(0))
-      out.write(be32(off.toLong)); out.write(be32(data.length.toLong))
+      out.write(tag); out.write(be(0, 4))
+      out.write(be(off.toLong, 4)); out.write(be(data.length.toLong, 4))
       off += data.length
     }
     entries.foreach { case (_, data) => out.write(data) }
@@ -207,15 +200,14 @@ object Font {
     * to pin both directory paths. */
   def synthWoff(id: Long): Array[Byte] = {
     val sfnt = synthFont(id)
-    def u16(i: Int): Int = ((sfnt(i) & 0xff) << 8) | (sfnt(i + 1) & 0xff)
-    def u32(i: Int): Long = (u16(i).toLong << 16) | u16(i + 2)
-    val numTables = u16(4)
-    val flavor = u32(0)
+    val r = Bytes(sfnt); import r._
+    val numTables = be16(4)
+    val flavor = be32(0)
     val tables = (0 until numTables).map { t =>
       val rec = 12 + 16 * t
       val tag = sfnt.slice(rec, rec + 4)
-      val off = u32(rec + 8).toInt
-      val len = u32(rec + 12).toInt
+      val off = be32(rec + 8).toInt
+      val len = be32(rec + 12).toInt
       (tag, sfnt.slice(off, off + len))
     }
     val parts = tables.zipWithIndex.map { case ((tag, data), t) =>
@@ -233,22 +225,22 @@ object Font {
       }
     }
     val out = new java.io.ByteArrayOutputStream()
-    out.write(be32(0x774F4646L)) // wOFF
-    out.write(be32(flavor))
-    out.write(be32(0)) // length: filled below (parser doesn't read it)
-    out.write(be16(numTables)); out.write(be16(0))
-    out.write(be32(12L + 16L * numTables +
-      tables.map(_._2.length.toLong).sum)) // totalSfntSize
-    out.write(be16(1)); out.write(be16(0)) // version
-    out.write(be32(0)); out.write(be32(0)); out.write(be32(0)) // meta
-    out.write(be32(0)); out.write(be32(0)) // priv
+    out.write(be(0x774F4646L, 4)) // wOFF
+    out.write(be(flavor, 4))
+    out.write(be(0, 4)) // length: filled below (parser doesn't read it)
+    out.write(be(numTables, 2)); out.write(be(0, 2))
+    out.write(be(12L + 16L * numTables +
+      tables.map(_._2.length.toLong).sum, 4)) // totalSfntSize
+    out.write(be(1, 2)); out.write(be(0, 2)) // version
+    out.write(be(0, 4)); out.write(be(0, 4)); out.write(be(0, 4)) // meta
+    out.write(be(0, 4)); out.write(be(0, 4)) // priv
     var off = 44 + 20 * numTables
     parts.foreach { case (tag, comp, orig) =>
       out.write(tag)
-      out.write(be32(off.toLong))
-      out.write(be32(comp.length.toLong))
-      out.write(be32(orig.toLong))
-      out.write(be32(0)) // origChecksum: ignored by design
+      out.write(be(off.toLong, 4))
+      out.write(be(comp.length.toLong, 4))
+      out.write(be(orig.toLong, 4))
+      out.write(be(0, 4)) // origChecksum: ignored by design
       off += comp.length
     }
     parts.foreach { case (_, comp, _) => out.write(comp) }

@@ -39,13 +39,6 @@ object Archives {
   final case class TarEntry(name: String, size: Long, type_flag: String,
                             text: String)
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32(b: Array[Byte], i: Int): Long =
-    (u16(b, i).toLong) | (u16(b, i + 2).toLong << 16)
-  private def u64(b: Array[Byte], i: Int): Long =
-    u32(b, i) | (u32(b, i + 4) << 32)
-
   /** Central-directory ZIP parse, classic AND ZIP64 (since r14: the
     * EOCD's 0xFFFF/0xFFFFFFFF sentinels route through the ZIP64 EOCD
     * locator to the 64-bit record, and per-entry sentinels resolve
@@ -56,6 +49,7 @@ object Archives {
     * (encryption, methods other than stored/deflate). */
   def parseZip(b: Array[Byte]): Option[Seq[ZipEntry]] = {
     if (b == null || b.length < 22) return None
+    val r = Bytes(b); import r._
     // EOCD: signature PK\5\6, comment may pad up to 64 KiB
     var eocd = -1
     var i = b.length - 22
@@ -66,25 +60,25 @@ object Archives {
       i -= 1
     }
     if (eocd < 0) return None
-    var nEntries: Long = u16(b, eocd + 10)
-    if (nEntries != u16(b, eocd + 8)) return None // multi-disk
-    var cdSize = u32(b, eocd + 12)
-    var cdOff = u32(b, eocd + 16)
+    var nEntries: Long = le16(eocd + 10)
+    if (nEntries != le16(eocd + 8)) return None // multi-disk
+    var cdSize = le32(eocd + 12)
+    var cdOff = le32(eocd + 16)
     if (nEntries == 0xffffL || cdSize == 0xffffffffL ||
       cdOff == 0xffffffffL) {
       // ZIP64: locator (PK\6\7) sits immediately before the EOCD
       val loc = eocd - 20
       if (loc < 0 || !(b(loc) == 'P' && b(loc + 1) == 'K' &&
         b(loc + 2) == 6 && b(loc + 3) == 7)) return None
-      val z64 = u64(b, loc + 8)
+      val z64 = le64(loc + 8)
       if (z64 < 0 || z64 + 56 > b.length) return None
       val zi = z64.toInt
       if (!(b(zi) == 'P' && b(zi + 1) == 'K' && b(zi + 2) == 6 &&
         b(zi + 3) == 6)) return None
-      if (u64(b, zi + 24) != u64(b, zi + 32)) return None // multi-disk
-      nEntries = u64(b, zi + 32)
-      cdSize = u64(b, zi + 40)
-      cdOff = u64(b, zi + 48)
+      if (le64(zi + 24) != le64(zi + 32)) return None // multi-disk
+      nEntries = le64(zi + 32)
+      cdSize = le64(zi + 40)
+      cdOff = le64(zi + 48)
     }
     if (nEntries < 0 || nEntries > (1L << 24)) return None
     if (cdOff < 0 || cdSize < 0 || cdOff + cdSize > eocd) return None
@@ -96,16 +90,16 @@ object Archives {
       if (!(b(p.toInt) == 'P' && b(p.toInt + 1) == 'K' &&
         b(p.toInt + 2) == 1 && b(p.toInt + 3) == 2)) return None
       val pi = p.toInt
-      val flags = u16(b, pi + 8)
+      val flags = le16(pi + 8)
       if ((flags & 0x1) != 0) return None // encrypted
-      val method = u16(b, pi + 10)
-      val crc = u32(b, pi + 16)
-      var csize = u32(b, pi + 20)
-      var usize = u32(b, pi + 24)
-      val nameLen = u16(b, pi + 28)
-      val extraLen = u16(b, pi + 30)
-      val commentLen = u16(b, pi + 32)
-      var lho = u32(b, pi + 42)
+      val method = le16(pi + 10)
+      val crc = le32(pi + 16)
+      var csize = le32(pi + 20)
+      var usize = le32(pi + 24)
+      val nameLen = le16(pi + 28)
+      val extraLen = le16(pi + 30)
+      val commentLen = le16(pi + 32)
+      var lho = le32(pi + 42)
       if (p + 46 + nameLen + extraLen > b.length) return None
       if (csize == 0xffffffffL || usize == 0xffffffffL ||
         lho == 0xffffffffL) {
@@ -115,7 +109,7 @@ object Archives {
         val eEnd = e + extraLen
         var found = false
         while (e + 4 <= eEnd && !found) {
-          val id = u16(b, e); val sz = u16(b, e + 2)
+          val id = le16(e); val sz = le16(e + 2)
           if (id == 0x0001) {
             // reads are bounded by THIS field's declared size, not the
             // whole extras block — a truncated 0x0001 must reject, not
@@ -123,13 +117,13 @@ object Archives {
             val fEnd = math.min(e + 4 + sz, eEnd)
             var q = e + 4
             if (usize == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; usize = u64(b, q); q += 8
+              if (q + 8 > fEnd) return None; usize = le64(q); q += 8
             }
             if (csize == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; csize = u64(b, q); q += 8
+              if (q + 8 > fEnd) return None; csize = le64(q); q += 8
             }
             if (lho == 0xffffffffL) {
-              if (q + 8 > fEnd) return None; lho = u64(b, q); q += 8
+              if (q + 8 > fEnd) return None; lho = le64(q); q += 8
             }
             found = true
           } else e += 4 + sz
@@ -144,7 +138,7 @@ object Archives {
       val li = lho.toInt
       if (!(b(li) == 'P' && b(li + 1) == 'K' && b(li + 2) == 3 &&
         b(li + 3) == 4)) return None
-      val dataAt = lho + 30 + u16(b, li + 26) + u16(b, li + 28)
+      val dataAt = lho + 30 + le16(li + 26) + le16(li + 28)
       if (dataAt + csize > b.length) return None
       val raw = java.util.Arrays.copyOfRange(b, dataAt.toInt,
         (dataAt + csize).toInt)
@@ -309,13 +303,10 @@ object Archives {
                zip64: Boolean = false): Array[Byte] = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val out = new java.io.ByteArrayOutputStream()
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    def le32(v: Long): Unit = { le16((v & 0xffff).toInt); le16(((v >>> 16) & 0xffff).toInt) }
-    def le64(v: Long): Unit = { le32(v & 0xffffffffL); le32(v >>> 32) }
     val central = new java.io.ByteArrayOutputStream()
-    def cle16(v: Int): Unit = { central.write(v & 0xff); central.write((v >>> 8) & 0xff) }
-    def cle32(v: Long): Unit = { cle16((v & 0xffff).toInt); cle16(((v >>> 16) & 0xffff).toInt) }
-    def cle64(v: Long): Unit = { cle32(v & 0xffffffffL); cle32(v >>> 32) }
+    // little-endian `n`-byte fields into the body / central directory
+    def put(v: Long, n: Int): Unit = out.write(Bytes.le(v, n))
+    def cput(v: Long, n: Int): Unit = central.write(Bytes.le(v, n))
     members.foreach { case (name, text, deflated) =>
       val data = text.getBytes(utf8)
       val crc = new java.util.zip.CRC32(); crc.update(data)
@@ -332,25 +323,27 @@ object Archives {
       val method = if (deflated) 8 else 0
       val lho = out.size().toLong
       out.write(Array[Byte]('P', 'K', 3, 4))
-      le16(20); le16(0); le16(method); le16(0); le16(0x2821) // fixed DOS stamp
-      le32(crc.getValue); le32(comp.length.toLong); le32(data.length.toLong)
-      le16(nameB.length); le16(0)
+      put(20, 2); put(0, 2); put(method, 2)
+      put(0, 2); put(0x2821, 2) // fixed DOS stamp
+      put(crc.getValue, 4); put(comp.length, 4); put(data.length, 4)
+      put(nameB.length, 2); put(0, 2)
       out.write(nameB); out.write(comp)
       central.write(Array[Byte]('P', 'K', 1, 2))
-      cle16(if (zip64) 45 else 20); cle16(if (zip64) 45 else 20)
-      cle16(0); cle16(method); cle16(0); cle16(0x2821)
-      cle32(crc.getValue)
+      cput(if (zip64) 45 else 20, 2); cput(if (zip64) 45 else 20, 2)
+      cput(0, 2); cput(method, 2); cput(0, 2); cput(0x2821, 2)
+      cput(crc.getValue, 4)
       if (zip64) {
-        cle32(0xffffffffL); cle32(0xffffffffL) // csize/usize sentinels
-        cle16(nameB.length); cle16(4 + 24); cle16(0); cle16(0); cle16(0)
-        cle32(0L); cle32(0xffffffffL) // offset sentinel
+        cput(0xffffffffL, 4); cput(0xffffffffL, 4) // csize/usize sentinels
+        cput(nameB.length, 2); cput(4 + 24, 2)
+        cput(0, 2); cput(0, 2); cput(0, 2)
+        cput(0L, 4); cput(0xffffffffL, 4) // offset sentinel
         central.write(nameB)
-        cle16(0x0001); cle16(24) // ZIP64 extra: usize, csize, offset
-        cle64(data.length.toLong); cle64(comp.length.toLong); cle64(lho)
+        cput(0x0001, 2); cput(24, 2) // ZIP64 extra: usize, csize, offset
+        cput(data.length.toLong, 8); cput(comp.length.toLong, 8); cput(lho, 8)
       } else {
-        cle32(comp.length.toLong); cle32(data.length.toLong)
-        cle16(nameB.length); cle16(0); cle16(0); cle16(0); cle16(0)
-        cle32(0L); cle32(lho)
+        cput(comp.length.toLong, 4); cput(data.length.toLong, 4)
+        cput(nameB.length, 2); cput(0, 2); cput(0, 2); cput(0, 2); cput(0, 2)
+        cput(0L, 4); cput(lho, 4)
         central.write(nameB)
       }
     }
@@ -360,18 +353,18 @@ object Archives {
     if (zip64) {
       val z64At = out.size().toLong
       out.write(Array[Byte]('P', 'K', 6, 6)) // ZIP64 EOCD record
-      le64(44); le16(45); le16(45); le32(0); le32(0)
-      le64(members.length.toLong); le64(members.length.toLong)
-      le64(cdSize); le64(cdOff)
+      put(44, 8); put(45, 2); put(45, 2); put(0, 4); put(0, 4)
+      put(members.length.toLong, 8); put(members.length.toLong, 8)
+      put(cdSize, 8); put(cdOff, 8)
       out.write(Array[Byte]('P', 'K', 6, 7)) // locator
-      le32(0); le64(z64At); le32(1)
+      put(0, 4); put(z64At, 8); put(1, 4)
       out.write(Array[Byte]('P', 'K', 5, 6)) // sentinel'd classic EOCD
-      le16(0); le16(0); le16(0xffff); le16(0xffff)
-      le32(0xffffffffL); le32(0xffffffffL); le16(0)
+      put(0, 2); put(0, 2); put(0xffff, 2); put(0xffff, 2)
+      put(0xffffffffL, 4); put(0xffffffffL, 4); put(0, 2)
     } else {
       out.write(Array[Byte]('P', 'K', 5, 6))
-      le16(0); le16(0); le16(members.length); le16(members.length)
-      le32(cdSize); le32(cdOff); le16(0)
+      put(0, 2); put(0, 2); put(members.length, 2); put(members.length, 2)
+      put(cdSize, 4); put(cdOff, 4); put(0, 2)
     }
     out.toByteArray
   }

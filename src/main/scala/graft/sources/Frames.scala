@@ -24,16 +24,15 @@ import org.apache.spark.sql.functions.udf
   */
 object Frames {
 
+  import Bytes.le
+
   final case class FrameMeta(format: String, content_size: Long,
                              window_size: Long, checksum: String,
                              block_independent: Boolean)
 
   def parseFrame(b: Array[Byte]): Option[FrameMeta] = {
     if (b == null || b.length < 6) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def le32(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    def le64(i: Long): Long = le32(i) | (le32(i + 4) << 32)
+    val r = Bytes(b); import r._
     le32(0) match {
       case 0xFD2FB528L => // zstd
         if (b.length < 6) return None
@@ -65,7 +64,7 @@ object Frames {
         val contentSize = fcsSize match {
           case 0 => -1L
           case 1 => u8(p).toLong
-          case 2 => (u8(p) | (u8(p + 1) << 8)).toLong + 256L // biased
+          case 2 => le16(p) + 256L // biased
           case 4 => le32(p)
           case _ => le64(p)
         }
@@ -118,9 +117,6 @@ object Frames {
     * cycling) — headers only, plus deterministic junk payload the
     * parser must never read. */
   def synthFrame(id: Long): Array[Byte] = {
-    def le32(v: Long) = Array[Byte](v.toByte, (v >>> 8).toByte,
-      (v >>> 16).toByte, (v >>> 24).toByte)
-    def le64(v: Long) = le32(v & 0xffffffffL) ++ le32(v >>> 32)
     val junk = Array.tabulate(((id % 16) + 4).toInt)(j =>
       ((id * 37 + j * 11) % 256).toByte)
     (id % 3) match {
@@ -129,35 +125,35 @@ object Frames {
         val checksum = id % 2 == 0
         fcsKind match {
           case 0 => // windowed, no FCS
-            le32(0xFD2FB528L) ++ Array[Byte](
+            le(0xFD2FB528L, 4) ++ Array[Byte](
               (if (checksum) 0x04 else 0x00).toByte,
               ((id % 8) << 3).toByte) ++ junk // window exp 10..17
           case 1 => // single-segment, 1-byte FCS
-            le32(0xFD2FB528L) ++ Array[Byte](
+            le(0xFD2FB528L, 4) ++ Array[Byte](
               (0x20 | (if (checksum) 0x04 else 0)).toByte,
               (id % 200).toByte) ++ junk
           case 2 => // windowed, 2-byte FCS (+256 bias)
-            le32(0xFD2FB528L) ++ Array[Byte](
+            le(0xFD2FB528L, 4) ++ Array[Byte](
               (0x40 | (if (checksum) 0x04 else 0)).toByte,
               ((id % 8) << 3).toByte,
               (id % 256).toByte, ((id / 256) % 256).toByte) ++ junk
           case _ => // windowed, 4-byte FCS
-            le32(0xFD2FB528L) ++ Array[Byte](
+            le(0xFD2FB528L, 4) ++ Array[Byte](
               (0x80 | (if (checksum) 0x04 else 0)).toByte,
-              ((id % 8) << 3).toByte) ++ le32(id * 1000 + 5) ++ junk
+              ((id % 8) << 3).toByte) ++ le(id * 1000 + 5, 4) ++ junk
         }
       case 1 => // LZ4
         val hasSize = id % 2 == 1
         val flg = 0x40 | (if (id % 4 == 1) 0x20 else 0) |
           (if (hasSize) 0x08 else 0) | (if (id % 2 == 1) 0x04 else 0)
         val bd = (((id % 4) + 4) << 4).toInt
-        le32(0x184D2204L) ++ Array[Byte](flg.toByte, bd.toByte) ++
-          (if (hasSize) le64(id * 777 + 1) else Array.empty[Byte]) ++
+        le(0x184D2204L, 4) ++ Array[Byte](flg.toByte, bd.toByte) ++
+          (if (hasSize) le(id * 777 + 1, 8) else Array.empty[Byte]) ++
           Array[Byte](0x5A) ++ junk // header checksum placeholder
       case _ => // XZ
         val check = Seq(0, 1, 4, 10)((id % 4).toInt)
         Array[Byte](0xFD.toByte, '7', 'z', 'X', 'Z', 0, 0,
-          check.toByte) ++ le32(0x11223344L) ++ junk
+          check.toByte) ++ le(0x11223344L, 4) ++ junk
     }
   }
 

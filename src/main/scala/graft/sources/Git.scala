@@ -193,12 +193,10 @@ object Git {
     */
   def parsePackIdx(b: Array[Byte]): Option[PackIdx] = {
     if (b == null || b.length < 8 + 1024 + 40) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u32(i: Long): Long = (u8(i).toLong << 24) | (u8(i + 1).toLong << 16) |
-      (u8(i + 2).toLong << 8) | u8(i + 3)
-    if (u32(0) != 0xff744f63L) return None // \377tOc
-    if (u32(4) != 2L) return None
-    val fanout = Array.tabulate(256)(k => u32(8L + 4 * k))
+    val r = Bytes(b); import r._
+    if (be32(0) != 0xff744f63L) return None // \377tOc
+    if (be32(4) != 2L) return None
+    val fanout = Array.tabulate(256)(k => be32(8L + 4 * k))
     var k = 1
     while (k < 256) {
       if (fanout(k) < fanout(k - 1)) return None
@@ -240,17 +238,17 @@ object Git {
     }
     var sumCrc = 0L
     i = 0L
-    while (i < n) { sumCrc += u32(crcAt + 4 * i); i += 1 }
+    while (i < n) { sumCrc += be32(crcAt + 4 * i); i += 1 }
     var maxOff = 0L
     var largeSeen = 0
     i = 0L
     while (i < n) {
-      val o = u32(offAt + 4 * i)
+      val o = be32(offAt + 4 * i)
       if ((o & 0x80000000L) != 0) {
         val idx = o & 0x7fffffffL
         if (idx >= nLarge) return None
         val p = largeAt + 8 * idx
-        val big = (u32(p) << 32) | u32(p + 4)
+        val big = be64(p)
         if (big < 0) return None
         if (big > maxOff) maxOff = big
         largeSeen += 1
@@ -272,10 +270,7 @@ object Git {
     val n = (id % 20 + 5).toInt
     val hasLarge = id % 3 == 0
     val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write(((v >>> 24) & 0xff).toInt); out.write(((v >>> 16) & 0xff).toInt)
-      out.write(((v >>> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
+    def w32(v: Long): Unit = out.write(Bytes.be(v, 4))
     w32(0xff744f63L); w32(2L)
     def byte0(kk: Int): Int = kk * 256 / n
     (0 until 256).foreach { bb =>
@@ -290,7 +285,7 @@ object Git {
       if (hasLarge && kk == 2) w32(0x80000000L) // large index 0
       else w32(12L + kk * (100 + id % 50))
     }
-    if (hasLarge) { w32((2147483648L + id) >>> 32); w32((2147483648L + id) & 0xffffffffL) }
+    if (hasLarge) out.write(Bytes.be(2147483648L + id, 8))
     // trailing packfile + idx checksums (closed-form filler bytes)
     (0 until 40).foreach(j => out.write(((id + j) % 256).toInt))
     out.toByteArray

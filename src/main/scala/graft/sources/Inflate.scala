@@ -6,7 +6,9 @@ package graft.sources
   * handling and bomb guard can never diverge between copies. r16
   * folded the two remaining older copies in (Pdf via [[apply]] with
   * its 64 MiB cap, Archives via [[exact]] which keeps its
-  * declared-size contract).
+  * declared-size contract); the WARC gzip-member walk reads through
+  * [[member]] and PNG's IDAT stream through [[exact]]. This is the
+  * only file that constructs a `java.util.zip.Inflater`.
   */
 private[graft] object Inflate {
 
@@ -15,34 +17,52 @@ private[graft] object Inflate {
     * exceeds it, stalls, or ends unfinished returns None, never junk
     * or an OOM. */
   def apply(data: Array[Byte], raw: Boolean, cap: Int)
-    : Option[Array[Byte]] = {
+    : Option[Array[Byte]] = member(data, 0, raw, cap).map(_._1)
+
+  /** Inflate the one stream that starts at `data(from)`, leaving any
+    * bytes after its end unread. Returns the output and the number of
+    * input bytes the stream occupied — a gzip member walk needs that
+    * count to find the member trailer. Same None contract as
+    * [[apply]]. */
+  def member(data: Array[Byte], from: Int, raw: Boolean, cap: Long)
+    : Option[(Array[Byte], Int)] = {
     val inf = new java.util.zip.Inflater(raw)
-    inf.setInput(data)
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(cap, data.length * 2 + 64))
-    val buf = new Array[Byte](8192)
+    val len = data.length - from
+    inf.setInput(data, from, len)
+    // inflate straight into a doubling buffer of at most cap + 1 bytes,
+    // first sized for a small stream, not for whatever follows it
+    var out = new Array[Byte](
+      math.min(cap + 1, math.min(len, 4096) * 2L + 64).toInt)
+    var n = 0
     try {
       while (!inf.finished() && !inf.needsInput()) {
-        val k = inf.inflate(buf)
+        if (n == out.length) {
+          if (n > cap) return None // decompression bomb
+          out = java.util.Arrays.copyOf(out, math.min(cap + 1, 2L * n).toInt)
+        }
+        val k = inf.inflate(out, n, out.length - n)
         if (k == 0 && !inf.finished()) return None // stalled stream
-        out.write(buf, 0, k)
-        if (out.size > cap) return None // decompression bomb
+        n += k
       }
+      if (n > cap) return None // decompression bomb
       if (!inf.finished()) return None // truncated input
-      Some(out.toByteArray)
+      Some((java.util.Arrays.copyOf(out, n), len - inf.getRemaining))
     } catch { case _: java.util.zip.DataFormatException => None }
     finally inf.end()
   }
 
-  /** Inflate RAW deflate into an exact `expected`-byte buffer (ZIP
-    * members, where the central directory declares the size).
-    * Keeps the original Archives contract: output of exactly
+  /** Inflate into an exact `expected`-byte buffer: RAW deflate for ZIP
+    * members (the central directory declares the size), zlib
+    * (`raw = false`) for PNG's IDAT stream (IHDR fixes the scanline
+    * bytes). Keeps the original Archives contract: output of exactly
     * `expected` bytes is accepted even with unconsumed trailing
     * compressed bytes (the member CRC gates content); shorter
-    * output, stalls and bombs (expected > 256 MiB) return None. */
-  def exact(data: Array[Byte], expected: Long): Option[Array[Byte]] = {
+    * output, stalls (a zlib stream asking for a preset dictionary
+    * included) and bombs (expected > 256 MiB) return None. */
+  def exact(data: Array[Byte], expected: Long, raw: Boolean = true)
+    : Option[Array[Byte]] = {
     if (expected < 0 || expected > (256L << 20)) return None
-    val inf = new java.util.zip.Inflater(true)
+    val inf = new java.util.zip.Inflater(raw)
     try {
       inf.setInput(data)
       val out = new Array[Byte](expected.toInt)

@@ -34,29 +34,19 @@ object Orc {
   private val compNames = Map(0 -> "none", 1 -> "zlib", 2 -> "snappy",
     3 -> "lzo", 4 -> "lz4", 5 -> "zstd")
 
-  /** Minimal bounds-checked protobuf walker over a slice. */
-  private final class PB(b: Array[Byte], var pos: Long, val end: Long) {
-    def varint(): Option[Long] = {
-      var v = 0L; var shift = 0
-      while (shift <= 63) {
-        if (pos >= end) return None
-        val byt = b(pos.toInt) & 0xff
-        pos += 1
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some(v)
-        shift += 7
-      }
-      None
-    }
+  /** The shared bounds-checked cursor plus protobuf structure:
+    * length-delimited slices, wire-type skips and the field walk. */
+  private final class PB(b: Array[Byte], pos0: Long, end0: Long)
+      extends Bytes.Cursor(b, pos0, end0) {
     def lenSlice(): Option[(Long, Long)] = varint().flatMap { n =>
-      if (n < 0 || pos + n > end) None
-      else { val r = (pos, pos + n); pos += n; Some(r) }
+      val from = pos
+      if (skip(n)) Some((from, pos)) else None
     }
-    def skip(wire: Int): Boolean = wire match {
+    def skipField(wire: Int): Boolean = wire match {
       case 0 => varint().isDefined
-      case 1 => if (pos + 8 > end) false else { pos += 8; true }
+      case 1 => skip(8)
       case 2 => lenSlice().isDefined
-      case 5 => if (pos + 4 > end) false else { pos += 4; true }
+      case 5 => skip(4)
       case _ => false // groups / reserved: reject
     }
     /** Iterate fields; cb must consume the value (false poisons). */
@@ -83,8 +73,7 @@ object Orc {
     var p = from
     while (p < until) {
       if (p + 3 > until) return None
-      val h = (b(p.toInt) & 0xffL) | ((b(p.toInt + 1) & 0xffL) << 8) |
-        ((b(p.toInt + 2) & 0xffL) << 16)
+      val h = Bytes(b).le24(p)
       val clen = h >>> 1
       val original = (h & 1) == 1
       p += 3
@@ -129,7 +118,7 @@ object Orc {
           case Some((a, z)) => magicOk = str(b, a, z) == "ORC"; true
           case None => false
         }
-        case (_, wire) => ps.skip(wire)
+        case (_, wire) => ps.skipField(wire)
       }
     }
     if (!psOk || !magicOk || footerLen <= 0) return None
@@ -175,7 +164,7 @@ object Orc {
                 case (5, 0) => sb.varint() match {
                   case Some(v) => nr = v; true; case None => false
                 }
-                case (_, sw2) => sb.skip(sw2)
+                case (_, sw2) => sb.skipField(sw2)
               }
             }
             if (!ok || off < 0 || nr < 0) return None
@@ -192,7 +181,7 @@ object Orc {
           case Some(v) => nRows = v; true
           case None => false
         }
-        case (_, wire) => fb.skip(wire)
+        case (_, wire) => fb.skipField(wire)
       }
     }
     if (!fOk || nRows < 0 || nTypes == 0) return None
@@ -204,17 +193,13 @@ object Orc {
 
   private final class PW {
     val out = new java.io.ByteArrayOutputStream()
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) {
-        out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7
-      }
-      out.write(v.toInt)
+    def field(f: Long, wire: Int): Unit =
+      out.write(Bytes.varint((f << 3) | wire))
+    def vint(f: Long, v: Long): Unit = {
+      field(f, 0); out.write(Bytes.varint(v))
     }
-    def field(f: Long, wire: Int): Unit = varint((f << 3) | wire)
-    def vint(f: Long, v: Long): Unit = { field(f, 0); varint(v) }
     def bytes(f: Long, v: Array[Byte]): Unit = {
-      field(f, 2); varint(v.length.toLong); out.write(v)
+      field(f, 2); out.write(Bytes.varint(v.length)); out.write(v)
     }
   }
 
@@ -244,7 +229,7 @@ object Orc {
     // types: struct root + m leaves (kind cycle long/string/double/date)
     val rootT = new PW
     rootT.vint(1, 12L) // STRUCT
-    (0 until m).foreach { j => rootT.field(2, 0); rootT.varint(j + 1L) }
+    (0 until m).foreach(j => rootT.vint(2, j + 1L))
     fw.bytes(4, rootT.out.toByteArray)
     (0 until m).foreach { j =>
       val t = new PW
@@ -266,8 +251,7 @@ object Orc {
         d.end()
         val body = acc.toByteArray
         val h = body.length << 1
-        Array[Byte]((h & 0xff).toByte, ((h >>> 8) & 0xff).toByte,
-          ((h >>> 16) & 0xff).toByte) ++ body
+        Bytes.le(h, 3) ++ body
       }
     // PostScript (plain)
     val psw = new PW

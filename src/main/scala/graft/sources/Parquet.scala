@@ -44,40 +44,24 @@ object Parquet {
 
   // ---- thrift compact-protocol reader ------------------------------ //
 
-  /** Bounds-checked cursor over the footer slice (positions Long —
-    * the byte-walk rule). All reads return Option; None poisons the
-    * whole parse.
+  /** The shared bounds-checked cursor plus Thrift compact structure:
+    * binaries, list headers, struct field walks and the structural
+    * skip. All reads return Option; None poisons the whole parse.
     */
-  private final class TC(b: Array[Byte], var pos: Long, val end: Long) {
-    def u8(): Option[Int] =
-      if (pos >= end) None
-      else { val v = b(pos.toInt) & 0xff; pos += 1; Some(v) }
-    def varint(): Option[Long] = {
-      var v = 0L; var shift = 0
-      while (shift <= 63) {
-        val byt = u8().getOrElse(return None)
-        v |= (byt & 0x7fL) << shift
-        if ((byt & 0x80) == 0) return Some(v)
-        shift += 7
-      }
-      None // > 10 bytes: not a varint
-    }
-    def zigzag(): Option[Long] = varint().map(v => (v >>> 1) ^ -(v & 1L))
+  private final class TC(b: Array[Byte], pos0: Long, end0: Long)
+      extends Bytes.Cursor(b, pos0, end0) {
     def binary(): Option[Array[Byte]] = varint().flatMap { n =>
-      if (n < 0 || n > (1 << 24) || pos + n > end) None
-      else { val r = b.slice(pos.toInt, (pos + n).toInt); pos += n; Some(r) }
+      if (n > (1 << 24)) None else slice(n)
     }
-    def skipN(n: Long): Boolean =
-      if (n < 0 || pos + n > end) false else { pos += n; true }
 
     /** Structural skip of one value of compact type `tpe`. */
     def skip(tpe: Int, depth: Int): Boolean = {
       if (depth > 16) return false
       tpe match {
         case 1 | 2 => true // boolean true/false: value in the type
-        case 3 => skipN(1) // byte
+        case 3 => skip(1) // byte
         case 4 | 5 | 6 => varint().isDefined // i16/i32/i64
-        case 7 => skipN(8) // double (8 bytes)
+        case 7 => skip(8) // double (8 bytes)
         case 8 => binary().isDefined // binary/string
         case 9 | 10 => // list/set
           listHeader() match {
@@ -156,9 +140,7 @@ object Parquet {
   /** Plain (non-compact) little-endian i64 — the Parquet stats
     * encoding for INT64 values. */
   private def statI64(v: Array[Byte]): Option[Long] =
-    if (v.length != 8) None
-    else Some((0 until 8).foldLeft(0L)((a, i) =>
-      a | ((v(i) & 0xffL) << (8 * i))))
+    if (v.length != 8) None else Some(Bytes(v).le64(0))
 
   // ---- the census ---------------------------------------------------- //
 
@@ -167,8 +149,7 @@ object Parquet {
     def magicAt(i: Int): Boolean = b(i) == 'P' && b(i + 1) == 'A' &&
       b(i + 2) == 'R' && b(i + 3) == '1'
     if (!magicAt(0) || !magicAt(b.length - 4)) return None
-    val fl = (b(b.length - 8) & 0xffL) | ((b(b.length - 7) & 0xffL) << 8) |
-      ((b(b.length - 6) & 0xffL) << 16) | ((b(b.length - 5) & 0xffL) << 24)
+    val fl = Bytes(b).le32(b.length - 8)
     val fStart = b.length - 8L - fl
     if (fl <= 0 || fStart < 4) return None
     val tc = new TC(b, fStart, b.length - 8L)
@@ -355,36 +336,28 @@ object Parquet {
     private var last = List(0) // field-id stack (one frame per struct)
     def bytes: Array[Byte] = out.toByteArray
     def raw(v: Int): Unit = out.write(v & 0xff)
-    def varint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { raw(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      raw(v.toInt)
-    }
-    def zigzag(v: Long): Unit = varint((v << 1) ^ (v >> 63))
+    def put(v: Array[Byte]): Unit = out.write(v)
     def field(id: Int, tpe: Int): Unit = {
       val delta = id - last.head
       if (delta >= 1 && delta <= 15) raw((delta << 4) | tpe)
-      else { raw(tpe); zigzag(id.toLong) }
+      else { raw(tpe); put(Bytes.zigzag(id)) }
       last = id :: last.tail
     }
     def push(): Unit = last = 0 :: last
     def pop(): Unit = { raw(0); last = last.tail }
-    def i32(id: Int, v: Long): Unit = { field(id, 5); zigzag(v) }
-    def i64(id: Int, v: Long): Unit = { field(id, 6); zigzag(v) }
+    def i32(id: Int, v: Long): Unit = { field(id, 5); put(Bytes.zigzag(v)) }
+    def i64(id: Int, v: Long): Unit = { field(id, 6); put(Bytes.zigzag(v)) }
     def bin(id: Int, v: Array[Byte]): Unit = {
-      field(id, 8); varint(v.length.toLong); out.write(v)
+      field(id, 8); put(Bytes.varint(v.length)); put(v)
     }
     def strF(id: Int, v: String): Unit =
       bin(id, v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     def list(id: Int, n: Int, elemType: Int): Unit = {
       field(id, 9)
       if (n < 15) raw((n << 4) | elemType)
-      else { raw(0xf0 | elemType); varint(n.toLong) }
+      else { raw(0xf0 | elemType); put(Bytes.varint(n)) }
     }
   }
-
-  private def i64le(v: Long): Array[Byte] =
-    Array.tabulate(8)(i => ((v >>> (8 * i)) & 0xff).toByte)
 
   /** Deterministic per-id parquet file (real footer, filler data
     * region): k = id%3+2 leaf columns alternating INT64/BYTE_ARRAY,
@@ -420,10 +393,10 @@ object Parquet {
         w.field(3, 12) // meta_data struct
         w.push()
         w.i32(1, if (j % 2 == 0) 2L else 6L) // type
-        w.list(2, 1, 5); w.zigzag(0L) // encodings: [PLAIN]
+        w.list(2, 1, 5); w.put(Bytes.zigzag(0L)) // encodings: [PLAIN]
         w.list(3, 1, 8) // path_in_schema
         val p = s"c$j".getBytes("UTF-8")
-        w.varint(p.length.toLong); p.foreach(x => w.raw(x))
+        w.put(Bytes.varint(p.length)); w.put(p)
         w.i32(4, (id + j) % 3) // codec
         w.i64(5, rowsPerGroup) // num_values
         w.i64(6, 1000L + 10 * j + r + id % 100) // uncompressed
@@ -433,15 +406,15 @@ object Parquet {
           w.field(12, 12)
           w.push()
           w.i64(3, (id + j) % 3) // null_count
-          w.bin(5, i64le(id + r + rowsPerGroup - 1)) // max_value
-          w.bin(6, i64le(id + r)) // min_value
+          w.bin(5, Bytes.le(id + r + rowsPerGroup - 1, 8)) // max_value
+          w.bin(6, Bytes.le(id + r, 8)) // min_value
           w.pop()
         }
         // an unknown trailing field newer writers might add: the
         // reader must structurally skip it
         w.field(32767, 8)
         val x = s"x$id".getBytes("UTF-8")
-        w.varint(x.length.toLong); x.foreach(c => w.raw(c))
+        w.put(Bytes.varint(x.length)); w.put(x)
         w.pop() // ColumnMetaData
         w.pop() // ColumnChunk
       }
@@ -458,8 +431,7 @@ object Parquet {
     val fill = (id % 17 + 3).toInt
     (0 until fill).foreach(j => out.write(((id + j) % 256).toInt))
     out.write(footer)
-    out.write(Array.tabulate[Byte](4)(i =>
-      ((footer.length >>> (8 * i)) & 0xff).toByte))
+    out.write(Bytes.le(footer.length, 4))
     out.write("PAR1".getBytes("UTF-8"))
     out.toByteArray
   }
@@ -498,13 +470,13 @@ object Parquet {
       if (depth > maxDepth) maxDepth = depth
       tpe match {
         case 1 | 2 => nBool += 1; true
-        case 3 => tc.skipN(1)
+        case 3 => tc.skip(1)
         case 4 | 5 | 6 =>
           tc.zigzag() match {
             case Some(v) => nInt += 1; intSum += v; true
             case None => false
           }
-        case 7 => nDouble += 1; tc.skipN(8)
+        case 7 => nDouble += 1; tc.skip(8)
         case 8 => tc.binary() match {
           case Some(v) => nStr += 1; strBytes += v.length; true
           case None => false
@@ -569,10 +541,10 @@ object Parquet {
     w.field(3, if (id % 2 == 0) 1 else 2) // bool in the type nibble
     w.field(4, 7) // double
     val dv = java.lang.Double.doubleToLongBits((id % 7).toDouble + 0.25)
-    (0 until 8).foreach(k => w.raw(((dv >>> (8 * k)) & 0xff).toInt))
+    w.put(Bytes.le(dv, 8))
     val n = (id % 3 + 1).toInt
     w.list(5, n, 6)
-    (0 until n).foreach(j => w.zigzag(id * 10 + j))
+    (0 until n).foreach(j => w.put(Bytes.zigzag(id * 10 + j)))
     w.field(6, 12) // nested struct
     w.push()
     w.i32(1, -(id % 50) - 1) // negative zigzag

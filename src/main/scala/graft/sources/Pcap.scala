@@ -30,12 +30,8 @@ object Pcap {
 
   def census(b: Array[Byte]): Option[PcapCensus] = {
     if (b == null || b.length < 24) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def raw32be(i: Long): Long = (u8(i).toLong << 24) |
-      (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3)
-    def raw32le(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    val magicBe = raw32be(0)
+    val r = Bytes(b); import r._
+    val magicBe = be32(0)
     val (little, nanos) = magicBe match {
       case 0xA1B2C3D4L => (false, false)
       case 0xA1B23C4DL => (false, true)
@@ -43,9 +39,8 @@ object Pcap {
       case 0x4D3CB2A1L => (true, true)
       case _ => return None
     }
-    def u32(i: Long): Long = if (little) raw32le(i) else raw32be(i)
-    def u16(i: Long): Int =
-      if (little) u8(i) | (u8(i + 1) << 8) else (u8(i) << 8) | u8(i + 1)
+    def u32(i: Long): Long = if (little) le32(i) else be32(i)
+    def u16(i: Long): Int = if (little) le16(i) else be16(i)
     if (u16(4) != 2) return None // major version
     val snaplen = u32(16)
     val linkType = u32(20).toInt
@@ -69,7 +64,7 @@ object Pcap {
       val p = i + 16
       if (linkType == 1 && incl >= 14) {
         // Ethernet II ethertype is ALWAYS big-endian (network order)
-        val ethertype = (u8(p + 12) << 8) | u8(p + 13)
+        val ethertype = be16(p + 12)
         ethertype match {
           case 0x0800 if incl >= 14 + 20 =>
             ipv4 += 1
@@ -98,14 +93,8 @@ object Pcap {
   def synthPcap(id: Long): Array[Byte] = {
     val little = id % 2 == 0
     val nanos = id % 4 == 3
-    def w32(v: Long): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte,
-        (v >>> 16).toByte, (v >>> 24).toByte)
-      else Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
-    def w16(v: Int): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte)
-      else Array[Byte]((v >>> 8).toByte, v.toByte)
+    def w32(v: Long) = if (little) Bytes.le(v, 4) else Bytes.be(v, 4)
+    def w16(v: Int) = if (little) Bytes.le(v, 2) else Bytes.be(v, 2)
     val out = new java.io.ByteArrayOutputStream()
     out.write(w32(if (nanos) 0xA1B23C4DL else 0xA1B2C3D4L))
     out.write(w16(2)); out.write(w16(4)) // version 2.4
@@ -173,20 +162,15 @@ object Pcap {
     */
   def censusNg(b: Array[Byte]): Option[PcapngCensus] = {
     if (b == null || b.length < 28) return None
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def raw32be(i: Long): Long = (u8(i).toLong << 24) |
-      (u8(i + 1).toLong << 16) | (u8(i + 2).toLong << 8) | u8(i + 3)
-    def raw32le(i: Long): Long = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (raw32be(0) != 0x0A0D0D0AL) return None // SHB block type
-    val little = raw32be(8) match {
+    val r = Bytes(b); import r._
+    if (be32(0) != 0x0A0D0D0AL) return None // SHB block type
+    val little = be32(8) match {
       case 0x1A2B3C4DL => false
       case 0x4D3C2B1AL => true
       case _ => return None
     }
-    def u32(i: Long): Long = if (little) raw32le(i) else raw32be(i)
-    def u16(i: Long): Int =
-      if (little) u8(i) | (u8(i + 1) << 8) else (u8(i) << 8) | u8(i + 1)
+    def u32(i: Long): Long = if (little) le32(i) else be32(i)
+    def u16(i: Long): Int = if (little) le16(i) else be16(i)
     val n1 = b.length.toLong
     // per-interface (linkType, tsresol power) in IDB order
     val ifaces = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -255,7 +239,7 @@ object Pcap {
           bytes += orig
           val p = body + 20
           if (lt == 1 && incl >= 14) {
-            val ethertype = (u8(p + 12) << 8) | u8(p + 13)
+            val ethertype = be16(p + 12)
             ethertype match {
               case 0x0800 if incl >= 14 + 20 =>
                 ipv4 += 1
@@ -289,14 +273,8 @@ object Pcap {
     val little = id % 2 == 0
     val nanos = id % 4 == 3
     val twoIf = id % 3 == 0
-    def w32(v: Long): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte,
-        (v >>> 16).toByte, (v >>> 24).toByte)
-      else Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-        (v >>> 8).toByte, v.toByte)
-    def w16(v: Int): Array[Byte] =
-      if (little) Array[Byte](v.toByte, (v >>> 8).toByte)
-      else Array[Byte]((v >>> 8).toByte, v.toByte)
+    def w32(v: Long) = if (little) Bytes.le(v, 4) else Bytes.be(v, 4)
+    def w16(v: Int) = if (little) Bytes.le(v, 2) else Bytes.be(v, 2)
     def block(btype: Long, body: Array[Byte]): Array[Byte] = {
       val pad = (4 - body.length % 4) % 4
       val blen = 12L + body.length + pad

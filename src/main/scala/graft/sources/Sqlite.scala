@@ -34,16 +34,14 @@ object Sqlite {
       if (b(k) != magic.charAt(k).toByte) return None
       k += 1
     }
-    def u8(i: Long): Int = b(i.toInt) & 0xff
-    def u16(i: Long): Int = (u8(i) << 8) | u8(i + 1)
-    def u32(i: Long): Long = (u16(i).toLong << 16) | u16(i + 2)
-    val pageSize = u16(16) match {
+    val r = Bytes(b); import r._
+    val pageSize = be16(16) match {
       case 1 => 65536
       case v => v
     }
     if (pageSize < 512 || (pageSize & (pageSize - 1)) != 0) return None
-    val nPages = u32(28)
-    val encoding = u32(56) match {
+    val nPages = be32(28)
+    val encoding = be32(56) match {
       case 1 => "utf-8"
       case 2 => "utf-16le"
       case 3 => "utf-16be"
@@ -57,7 +55,7 @@ object Sqlite {
     val pageType = u8(ph)
     if (pageType == 0x05) return None // interior root: out of scope
     if (pageType != 0x0D) return None
-    val nCells = u16(ph + 3)
+    val nCells = be16(ph + 3)
     if (nCells > 10000) return None
     // the cell-pointer array must fit in the buffer BEFORE we index
     // into it — a truncated file whose header claims more cells than
@@ -66,7 +64,7 @@ object Sqlite {
     val tables = Vector.newBuilder[SqliteTable]
     var c = 0
     while (c < nCells) {
-      val cellPtr = u16(ph + 8 + 2L * c).toLong
+      val cellPtr = be16(ph + 8 + 2L * c).toLong
       if (cellPtr < ph || cellPtr >= b.length) return None
       val cur = new Cur(b, cellPtr)
       val payloadLen = cur.varint().getOrElse(return None)
@@ -151,9 +149,7 @@ object Sqlite {
 
   // ---- fixture ------------------------------------------------------ //
 
-  private def be16(v: Int) = Array((v >>> 8).toByte, v.toByte)
-  private def be32(v: Long) = Array((v >>> 24).toByte, (v >>> 16).toByte,
-    (v >>> 8).toByte, v.toByte)
+  import Bytes.be
 
   /** Deterministic per-id database: 512-byte pages, id%3+1 tables in
     * sqlite_master (plus an index row the table filter must skip),
@@ -197,24 +193,24 @@ object Sqlite {
     // leaf table page header at offset 100: type, first-freeblock,
     // cell count, content start, fragmented bytes
     page(0) = 0x0D
-    val hdrBytes = be16(0) ++ be16(nCells) ++ be16(ptrs.last) ++
+    val hdrBytes = be(0, 2) ++ be(nCells, 2) ++ be(ptrs.last, 2) ++
       Array(0.toByte)
     System.arraycopy(hdrBytes, 0, page, 1, hdrBytes.length)
     ptrs.zipWithIndex.foreach { case (p, i) =>
-      val pb = be16(p)
+      val pb = be(p, 2)
       page(8 + 2 * i) = pb(0); page(9 + 2 * i) = pb(1)
     }
     val nPages = nTables + 2L
     val header = "SQLite format 3\u0000".getBytes("ISO-8859-1") ++
-      be16(pageSize) ++ Array[Byte](1, 1, 0, 64, 32, 32) ++
-      be32(7) ++               // 24 file change counter
-      be32(nPages) ++          // 28 page count
-      be32(0) ++ be32(0) ++    // 32/36 freelist trunk + count
-      be32(1) ++               // 40 schema cookie
-      be32(1) ++               // 44 schema format
-      be32(0) ++ be32(0) ++    // 48/52 cache size, largest root
-      be32(1) ++               // 56 text encoding: UTF-8
-      be32((id % 50).toInt) ++ // 60 user version
+      be(pageSize, 2) ++ Array[Byte](1, 1, 0, 64, 32, 32) ++
+      be(7, 4) ++             // 24 file change counter
+      be(nPages, 4) ++        // 28 page count
+      be(0, 4) ++ be(0, 4) ++ // 32/36 freelist trunk + count
+      be(1, 4) ++             // 40 schema cookie
+      be(1, 4) ++             // 44 schema format
+      be(0, 4) ++ be(0, 4) ++ // 48/52 cache size, largest root
+      be(1, 4) ++             // 56 text encoding: UTF-8
+      be((id % 50).toInt, 4) ++ // 60 user version
       Array.fill(100 - 64)(0.toByte)
     val file = new Array[Byte](pageSize * nPages.toInt)
     System.arraycopy(header, 0, file, 0, 100)

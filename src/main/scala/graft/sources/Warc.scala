@@ -48,12 +48,6 @@ object Warc {
 
   // ---- RFC 1952 member walk --------------------------------------------
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-
   /** Walk a (possibly multi-member) gzip stream member by member,
     * verifying each member's header, trailer CRC32, and ISIZE, and
     * recording each member's byte offset + compressed length. None on
@@ -61,6 +55,7 @@ object Warc {
     * complete member, which `GZIPInputStream` silently swallows. */
   def gunzipMembers(b: Array[Byte]): Option[Vector[GzMember]] = {
     if (b.length == 0) return None // an empty stream is not a gzip stream
+    val r = Bytes(b); import r._
     val out = Vector.newBuilder[GzMember]
     var pos = 0L // Long cursor: size fields are unsigned 32-bit
     var total = 0L
@@ -75,7 +70,7 @@ object Warc {
       pos += 10
       if ((flg & 4) != 0) { // FEXTRA
         if (pos + 2 > b.length) return None
-        val xlen = u16le(b, pos.toInt)
+        val xlen = le16(pos)
         pos += 2 + xlen
         if (pos > b.length) return None
       }
@@ -91,31 +86,18 @@ object Warc {
         if (pos + 2 > b.length) return None
         val crc = new java.util.zip.CRC32()
         crc.update(b, start.toInt, (pos - start).toInt)
-        if ((crc.getValue & 0xffffL) != u16le(b, pos.toInt)) return None
+        if ((crc.getValue & 0xffffL) != le16(pos)) return None
         pos += 2
       }
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, pos.toInt, b.length - pos.toInt)
-      val member = new java.io.ByteArrayOutputStream()
-      val crc = new java.util.zip.CRC32()
-      val buf = new Array[Byte](64 * 1024)
-      try {
-        while (!inf.finished()) {
-          val n = try inf.inflate(buf) catch {
-            case _: java.util.zip.DataFormatException => return None
-          }
-          if (n == 0 && !inf.finished()) return None // truncated deflate
-          total += n
-          if (total > MaxInflated) return None
-          member.write(buf, 0, n)
-          crc.update(buf, 0, n)
-        }
-        pos += (b.length - pos) - inf.getRemaining // deflate bytes consumed
-      } finally inf.end()
+      val (data, used) = Inflate.member(b, pos.toInt, raw = true,
+        cap = MaxInflated - total).getOrElse(return None)
+      total += data.length
+      pos += used
       if (pos + 8 > b.length) return None // trailer
-      val data = member.toByteArray
-      if (u32le(b, pos.toInt) != crc.getValue) return None
-      if (u32le(b, pos.toInt + 4) != (data.length.toLong & 0xffffffffL))
+      val crc = new java.util.zip.CRC32()
+      crc.update(data)
+      if (le32(pos) != crc.getValue) return None
+      if (le32(pos + 4) != (data.length.toLong & 0xffffffffL))
         return None
       pos += 8
       out += GzMember(start, pos - start, data)

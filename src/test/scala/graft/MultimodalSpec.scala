@@ -368,6 +368,38 @@ class MultimodalSpec extends SparkSpec {
     assert(Binary.pngDecode(headerOnly).isEmpty)
   }
 
+  test("PNG decoder: a zlib stream asking for a preset dictionary is None, not a hang") {
+    def be(v: Long, n: Int) = // big-endian, as PNG stores lengths and CRCs
+      java.nio.ByteBuffer.allocate(8).putLong(v).array().takeRight(n)
+    // 1x1 truecolor, one unfiltered scanline, every chunk CRC correct
+    val scan = Array[Byte](0, 10, 20, 30)
+    val d = new java.util.zip.Deflater(
+      java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    d.setInput(scan); d.finish()
+    val buf = new Array[Byte](64)
+    val deflated = buf.take(d.deflate(buf)); d.end()
+    val adler = new java.util.zip.Adler32(); adler.update(scan)
+    def png(zlibHeader: Array[Byte]): Array[Byte] = {
+      def chunk(typ: String, data: Array[Byte]) = {
+        val td = typ.getBytes("US-ASCII") ++ data
+        val crc = new java.util.zip.CRC32(); crc.update(td)
+        be(data.length, 4) ++ td ++ be(crc.getValue, 4)
+      }
+      Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a) ++
+        chunk("IHDR", be(1, 4) ++ be(1, 4) ++ Array[Byte](8, 2, 0, 0, 0)) ++
+        chunk("IDAT", zlibHeader ++ deflated ++ be(adler.getValue, 4)) ++
+        chunk("IEND", Array.empty)
+    }
+    // the plain zlib header (78 9C) decodes the pixel...
+    val plain = Binary.pngDecode(png(Array[Byte](0x78, 0x9c.toByte)))
+    assert(plain.map(_.pixels.toSeq) == Some(Seq[Byte](10, 20, 30)))
+    // ...78 BB sets FDICT, and a DICTID follows: Inflater.inflate then
+    // returns 0 forever while needsInput() stays false
+    val fdict = png(Array[Byte](0x78, 0xbb.toByte) ++ be(adler.getValue, 4))
+    assert(Bounded(5, "pngDecode on an FDICT stream")(
+      Binary.pngDecode(fdict)).isEmpty)
+  }
+
   test("PNG channel stats match the closed-form pixel formula") {
     import graft.multimodal.Binary
     val id = 23L

@@ -37,6 +37,35 @@ class PrefixScanSpec extends SparkSpec {
     assert(!(a eq c))
   }
 
+  test("exclusive: per-method scans equal the partitioned running-sum window") {
+    // q290's AUC tail: several methods whose raw scores tie heavily,
+    // pre-aggregated to one row per (method, score) — the shape that
+    // replaced Window.partitionBy(method) with one scan per method
+    val raw = for (m <- Seq("cn", "jaccard", "adamic_adar"); i <- 0 until 300)
+      yield (m, ((i * 37 + m.length) % 23) / 2.0, (i * 13 + m.length) % 3 / 2)
+    val byScore = raw.toDF("method", "score", "pos")
+      .groupBy("method", "score").agg(
+        sum(col("pos")).cast("long").as("np"),
+        sum(lit(1) - col("pos")).cast("long").as("nn"))
+    val methods = raw.map(_._1).distinct
+    val viaScan = methods.map { m =>
+      PrefixScan.exclusive(byScore.where(col("method") === m), "score",
+        Seq("np", "nn"), s"psspec-window.$m")._1
+        .select("method", "score", "cum_np_below", "cum_nn_below")
+    }.reduce(_ unionByName _)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("method")
+      .orderBy("score")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    val viaWindow = byScore.select(col("method"), col("score"),
+      coalesce(sum("np").over(w), lit(0L)).as("cum_np_below"),
+      coalesce(sum("nn").over(w), lit(0L)).as("cum_nn_below"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("method", "score").collect().map(_.toSeq).toSeq
+    val a = rows(viaScan)
+    assert(a.length == byScore.count() && a.length > 3 * 5)
+    assert(a == rows(viaWindow))
+  }
+
   // NOTE deliberately untested here: memo hits after Caches.releaseAll
   // recompute through intact lineage (the scan result is a lazy RDD
   // chain, not a checkpoint). Calling releaseAll mid-suite would yank

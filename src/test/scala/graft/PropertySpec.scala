@@ -227,6 +227,82 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  /** (fixture, its parser) for every byte format with a `synth*`
+    * builder: the mutation and prefix sweeps run over this table. */
+  private val parserTable: Seq[(String, Long => Array[Byte], Array[Byte] => Any)] = {
+    import graft.multimodal.{Ebml, Font, Pdf, Vp8l}
+    import graft.sources._
+    Seq(
+      ("image-header", Binary.synthHeader _, Binary.parseImageMeta _),
+      ("legacy-image", Binary.synthLegacyImage _, Binary.parseImageMeta _),
+      ("webp", Binary.synthWebp _, Binary.parseWebpMeta _),
+      ("avif", Binary.synthAvif _, Binary.parseAvifMeta _),
+      ("exif", Binary.synthExifJpeg _, Binary.parseExifMeta _),
+      ("svg", Binary.synthSvg _, Binary.parseSvgMeta _),
+      ("png", Binary.synthPng _, Binary.pngDecode _),
+      ("gif", Binary.synthGif _, Binary.gifDecode _),
+      ("jpeg", Binary.synthJpeg _, Binary.jpegDecode _),
+      ("jpeg-rst", Binary.synthJpegRst _, Binary.jpegDecode _),
+      ("jpeg-420", Binary.synthColorJpeg _, Binary.jpegDecodeColor420 _),
+      ("jpeg-prog", Binary.synthJpegProg _, Binary.jpegDecodeProgressive _),
+      ("vp8l", Vp8l.synthVp8l _, Vp8l.decode _),
+      ("audio-header", Binary.synthAudioHeader _, Binary.parseAudioMeta _),
+      ("mp3", Binary.synthMp3 _, Binary.parseAudioMeta _),
+      ("id3", Binary.synthTaggedMp3 _, Binary.parseId3v2 _),
+      ("opus", Binary.synthOggOpus _, Binary.parseOggOpusMeta _),
+      ("opus-tags", Binary.synthOggOpus _, Binary.parseOpusTags _),
+      ("vorbis", Binary.synthOggVorbis _, Binary.parseOggVorbisMeta _),
+      ("flac-tags", Binary.synthTaggedFlac _, Binary.parseFlacTags _),
+      ("flac", Binary.synthFlac _, Binary.flacDecode _),
+      ("wav-pcm", Binary.synthWavPcm _, Binary.wavPcmDecode _),
+      ("mp4", Binary.synthVideoHeader _, Binary.parseVideoMeta _),
+      ("mp4-tracks", Binary.synthVideoTracks _, Binary.parseTracks _),
+      ("mkv", Ebml.synthMkv _, Ebml.parseMkv _),
+      ("font", Font.synthFont _, Font.parseFont _),
+      ("woff", Font.synthWoff _, Font.parseWoff _),
+      ("pdf", Pdf.synthPdf _, Pdf.parse _),
+      ("pdf-cid", Pdf.synthCidPdf _, Pdf.parse _),
+      ("pdf-objstm", Pdf.synthObjStmPdf _, Pdf.parse _),
+      ("pdf-encrypted", Pdf.synthEncryptedPdf _, Pdf.parse _),
+      ("zip", Archives.synthZip _, Archives.parseZip _),
+      ("zip64", Archives.synthZip64 _, Archives.parseZip _),
+      ("tar-gz", Archives.synthTarGz _, Archives.parseTarGz _),
+      ("tar", Archives.synthTarSpecial _, Archives.parseTar _),
+      ("docx", Docs.synthDocx _, Docs.docxText _),
+      ("epub", Docs.synthEpub _, Docs.epubText _),
+      ("odt", Docs.synthOdt _, Docs.odtText _),
+      ("xlsx", Office.synthXlsx _, Office.xlsxCells _),
+      ("pptx", Office.synthPptx _, Office.pptxText _),
+      ("warc", (id: Long) => Warc.buildCrawl(Seq((s"http://h/$id",
+        s"doc $id", if (id % 2 == 0) "response" else "conversion", 200,
+        "text/html"))), Warc.parseCrawl _),
+      ("avro", Avro.synthAvro _, Avro.parseAvro _),
+      ("cbor", Cbor.synthCbor _, Cbor.census _),
+      ("msgpack", Msgpack.synthMsgpack _, Msgpack.census _),
+      ("proto", Proto.synthProto _, Proto.census _),
+      ("thrift", Parquet.synthThrift _, Parquet.thriftCensus _),
+      ("parquet", Parquet.synthParquet _, Parquet.parseFooter _),
+      ("orc", Orc.synthOrc _, Orc.parseOrc _),
+      ("sqlite", Sqlite.synthSqlite _, Sqlite.parseSqlite _),
+      ("frame", Frames.synthFrame _, Frames.parseFrame _),
+      ("git-loose", Git.synthLoose _, Git.parseLoose _),
+      ("git-packidx", Git.synthPackIdx _, Git.parsePackIdx _),
+      ("pcap", Pcap.synthPcap _, Pcap.census _),
+      ("pcapng", Pcap.synthPcapng _, Pcap.censusNg _))
+  }
+
+  test("binary parsers are total on every prefix of valid fixtures") {
+    // a truncated download or torn shard: every cut of fixtures 0..3
+    // must return (None or a surviving prefix), never throw or hang
+    for ((name, synth, parse) <- parserTable; id <- 0L to 3L) {
+      val full = synth(id)
+      var cut = 0
+      Bounded(20, s"$name fixture $id at prefix length $cut") {
+        while (cut <= full.length) { parse(full.take(cut)); cut += 1 }
+      }
+    }
+  }
+
   test("binary parsers never throw on arbitrary bytes") {
     import graft.multimodal.Vp8l
     import graft.sources.Warc
@@ -277,72 +353,14 @@ class PropertySpec extends AnyFunSuite {
     })
     // mutation fuzz: corrupt VALID containers anywhere — parsers must
     // stay total (None / surviving prefix), never throw or hang
-    check("mutate-valid", Prop.forAll(
-      Gen.choose(0L, 63L), Gen.choose(0, 1 << 16),
-      Gen.choose(0, 255)) { (id, posSeed, v) =>
-      def mut(b: Array[Byte]): Array[Byte] = {
-        val c = b.clone(); val p = posSeed % c.length
-        c(p) = v.toByte; c
-      }
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthPdf(id)))
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthCidPdf(id)))
-      graft.multimodal.Pdf.parse(mut(graft.multimodal.Pdf.synthObjStmPdf(id)))
-      graft.multimodal.Pdf.parse(mut(
-        graft.multimodal.Pdf.synthEncryptedPdf(id)))
-      graft.sources.Archives.parseZip(mut(
-        graft.sources.Archives.synthZip(id)))
-      graft.sources.Archives.parseZip(mut(
-        graft.sources.Archives.synthZip64(id)))
-      graft.sources.Archives.parseTarGz(mut(
-        graft.sources.Archives.synthTarGz(id)))
-      graft.sources.Archives.parseTar(mut(
-        graft.sources.Archives.synthTarSpecial(id)))
-      graft.sources.Docs.epubText(mut(graft.sources.Docs.synthEpub(id)))
-      graft.sources.Office.xlsxCells(mut(
-        graft.sources.Office.synthXlsx(id)))
-      graft.sources.Office.pptxText(mut(
-        graft.sources.Office.synthPptx(id)))
-      graft.sources.Docs.odtText(mut(graft.sources.Docs.synthOdt(id)))
-      graft.multimodal.Font.parseFont(mut(
-        graft.multimodal.Font.synthFont(id)))
-      graft.sources.Avro.parseAvro(mut(graft.sources.Avro.synthAvro(id)))
-      graft.sources.Proto.census(mut(graft.sources.Proto.synthProto(id)))
-      graft.sources.Sqlite.parseSqlite(mut(
-        graft.sources.Sqlite.synthSqlite(id)))
-      graft.sources.Frames.parseFrame(mut(
-        graft.sources.Frames.synthFrame(id)))
-      graft.multimodal.Font.parseWoff(mut(
-        graft.multimodal.Font.synthWoff(id)))
-      graft.sources.Git.parseLoose(mut(
-        graft.sources.Git.synthLoose(id)))
-      graft.sources.Pcap.census(mut(
-        graft.sources.Pcap.synthPcap(id)))
-      graft.sources.Pcap.censusNg(mut(
-        graft.sources.Pcap.synthPcapng(id)))
-      graft.sources.Parquet.parseFooter(mut(
-        graft.sources.Parquet.synthParquet(id)))
-      graft.sources.Cbor.census(mut(
-        graft.sources.Cbor.synthCbor(id)))
-      graft.sources.Msgpack.census(mut(
-        graft.sources.Msgpack.synthMsgpack(id)))
-      graft.sources.Git.parsePackIdx(mut(
-        graft.sources.Git.synthPackIdx(id)))
-      graft.sources.Orc.parseOrc(mut(
-        graft.sources.Orc.synthOrc(id)))
-      graft.sources.Parquet.thriftCensus(mut(
-        graft.sources.Parquet.synthThrift(id)))
-      graft.multimodal.Binary.parseImageMeta(mut(
-        graft.multimodal.Binary.synthLegacyImage(id)))
-      graft.multimodal.Binary.parseExifMeta(mut(
-        graft.multimodal.Binary.synthExifJpeg(id)))
-      graft.multimodal.Binary.parseTracks(mut(
-        graft.multimodal.Binary.synthVideoTracks(id)))
-      graft.multimodal.Binary.parseOggVorbisMeta(mut(
-        graft.multimodal.Binary.synthOggVorbis(id)))
-      graft.multimodal.Ebml.parseMkv(mut(
-        graft.multimodal.Ebml.synthMkv(id)))
-      true
-    })
+    for ((name, synth, parse) <- parserTable)
+      check(s"mutate-valid $name", Prop.forAll(Gen.choose(0L, 63L),
+        Gen.choose(0, 1 << 16), Gen.choose(0, 255)) { (id, posSeed, v) =>
+        val c = synth(id).clone()
+        c(posSeed % c.length) = v.toByte
+        Bounded(5, s"$name on mutated fixture $id")(parse(c))
+        true
+      })
     // DOCX XML-level fuzz: container byte flips die at the CRC gate,
     // so mutate word/document.xml ITSELF and rebuild the zip around it
     // (fresh CRC) — this is the lane that reaches the paragraph walk,
